@@ -146,7 +146,14 @@ class Graph:
         batch-bounded overlap, append with a narrow union — the same
         gated two-step as rdfs._derive_only / Dictionary.union
         (tools/probe_r8.py). Large batches fall back to the shuffle
-        anti-join, the correct plan when batch ≈ corpus."""
+        anti-join, the correct plan when batch ≈ corpus.
+
+        A graph with complete planner stats (a loaded store, or an
+        earlier update of one) hands the snapshot its stats plus the
+        batch's per-predicate effect (`BgpStats.with_delta`), so the
+        next query plans without a full-store stats pass; the batch's
+        novelty is checkpointed once for that. Other graphs leave the
+        snapshot's stats to be computed on first use."""
         from pyspark import StorageLevel
 
         terms = striples.select(
@@ -178,7 +185,29 @@ class Graph:
             )
         else:
             fresh = new_triples.join(spo, ["s", "p", "o"], "left_anti")
-        return Graph(self.spark, spo.unionByName(fresh), d2)
+        if not self._carries_stats():
+            return Graph(self.spark, spo.unionByName(fresh), d2)
+        # carry the planner stats: materialize the batch-sized novelty
+        # once (a checkpoint, not a persist — a cached plan would pin
+        # the broadcasts above for the session) and add its
+        # per-predicate figures to the parent's
+        fresh = fresh.localCheckpoint(eager=True)
+        added = {
+            r["p"]: (r["cnt"], r["ns"], r["no"])
+            for r in BgpStats.per_pred(fresh).collect()
+        }
+        return Graph(
+            self.spark,
+            spo.unionByName(fresh),
+            d2,
+            stats=self._stats.with_delta(added=added),
+        )
+
+    def _carries_stats(self) -> bool:
+        """Whether an update's snapshot derives its stats from this
+        graph's (complete stats only). Otherwise the snapshot computes
+        them over the whole store on first use."""
+        return self._stats is not None and self._stats.complete
 
     def add_materialized_rdfs(
         self,
@@ -315,7 +344,10 @@ class Graph:
         persisted and counted once; below the insert gate it carries an
         explicit broadcast hint (corpus streams, zero corpus shuffle).
         Above the gate the shuffle join stands — the correct plan when
-        deleting a corpus-sized slice."""
+        deleting a corpus-sized slice.
+
+        Planner stats carry over as in `add_string_triples`: one
+        corpus-streaming pass counts the stored victims per predicate."""
         from pyspark import StorageLevel
 
         from graphula_spark.scratch import track
@@ -338,10 +370,25 @@ class Graph:
             if n_victims <= Graph.INSERT_BROADCAST_MAX_ROWS
             else victims
         )
-        remaining = self.triples.select("s", "p", "o").join(
-            right, ["s", "p", "o"], "left_anti"
+        spo = self.triples.select("s", "p", "o")
+        remaining = spo.join(right, ["s", "p", "o"], "left_anti")
+        if not self._carries_stats():
+            return Graph(self.spark, remaining, self.dictionary)
+        # carry the planner stats: one corpus-streaming pass counts the
+        # victims actually stored, per predicate
+        removed = {
+            r["p"]: r["cnt"]
+            for r in spo.join(right, ["s", "p", "o"], "left_semi")
+            .groupBy("p")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .collect()
+        }
+        return Graph(
+            self.spark,
+            remaining,
+            self.dictionary,
+            stats=self._stats.with_delta(removed=removed),
         )
-        return Graph(self.spark, remaining, self.dictionary)
 
     # -- persistence -----------------------------------------------------
     #: fixed bucket count for the predicate-partitioned layout
@@ -362,8 +409,11 @@ class Graph:
         At 100 TB a bound-predicate pattern scan then prunes to 1/64 of
         the data before any IO — the Parquet analogue of the reference's
         (0,p,0) index key (Index.scala:61-78). Rows are sorted by
-        (p, s, o) within partitions so parquet min/max row-group stats
-        prune bound-subject scans too.
+        (p, s, o) within each partition file so parquet min/max
+        row-group stats prune bound-subject scans too. Both sorts lead
+        with the partition column: the partitioned write sorts by it,
+        and a sort that does not start with it is replaced, losing the
+        row order.
 
         ``ops_layout`` picks the OPS twin's physical layout:
         ``"sorted"`` (default) keeps the p_bucket partitioning with
@@ -413,7 +463,7 @@ class Graph:
 
             def write_spo() -> None:
                 (
-                    bucketed.sortWithinPartitions("p", "s", "o")
+                    bucketed.sortWithinPartitions("p_bucket", "p", "s", "o")
                     .write.mode("overwrite")
                     .partitionBy("p_bucket")
                     .parquet(f"{path}/triples")
@@ -431,7 +481,7 @@ class Graph:
                     )
                     return
                 (
-                    bucketed.sortWithinPartitions("p", "o", "s")
+                    bucketed.sortWithinPartitions("p_bucket", "p", "o", "s")
                     .write.mode("overwrite")
                     .partitionBy("p_bucket")
                     .parquet(f"{path}/triples_ops")

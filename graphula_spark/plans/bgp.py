@@ -112,15 +112,21 @@ class BgpStats:
         #: average triples per uncollected predicate (estimate fallback)
         self.residual_avg = residual_avg
 
-    @classmethod
-    def compute(cls, triples: DataFrame) -> "BgpStats":
-        from concurrent.futures import ThreadPoolExecutor
-
-        agg = triples.groupBy("p").agg(
+    @staticmethod
+    def per_pred(triples: DataFrame) -> DataFrame:
+        """Per-predicate ``(p, cnt, ns, no)``: exact count, approximate
+        distinct subjects and objects."""
+        return triples.groupBy("p").agg(
             F.count(F.lit(1)).alias("cnt"),
             F.approx_count_distinct("s").alias("ns"),
             F.approx_count_distinct("o").alias("no"),
         )
+
+    @classmethod
+    def compute(cls, triples: DataFrame) -> "BgpStats":
+        from concurrent.futures import ThreadPoolExecutor
+
+        agg = cls.per_pred(triples)
         # the (p, o) heavy-hitter pass below is independent of the
         # per-predicate pass for every non-pathological graph (the
         # PO_PRED_CAP pruning only engages past 4096 predicates), so
@@ -206,6 +212,47 @@ class BgpStats:
         bound = cls.PO_PRED_CAP * cls.TOP_OBJECTS
         rows = cls._po_top_rows(triples).limit(bound + 1).collect()
         return None if len(rows) > bound else rows
+
+    def with_delta(
+        self,
+        added: dict[int, tuple[int, int, int]] | None = None,
+        removed: dict[int, int] | None = None,
+    ) -> "BgpStats":
+        """Stats of this graph after an update, without a store scan.
+
+        ``added`` maps a predicate to the ``(count, ~distinct s,
+        ~distinct o)`` of the triples the update inserted (none of them
+        already stored); ``removed`` maps a predicate to the number of
+        stored triples the update deleted. Counts and ``total`` stay
+        exact, and a predicate whose count reaches 0 leaves ``by_pred``,
+        so the zero-cardinality fail-fast and `Graph.count_bgp` still
+        answer from them. The distinct counts only steer join order, so
+        they are summed and clipped to ``[1, count]``; ``po_top`` counts
+        are clipped to their predicate's count, or dropped with it.
+
+        Requires ``complete`` stats: in truncated stats an absent
+        predicate means 'uncollected', so its new count is unknown."""
+        if not self.complete:
+            raise ValueError("with_delta needs complete stats")
+        by_pred = dict(self.by_pred)
+        for p, (c, ns, no) in (added or {}).items():
+            c0, ns0, no0 = by_pred.get(p, (0, 0, 0))
+            by_pred[p] = (c0 + c, ns0 + ns, no0 + no)
+        for p, c in (removed or {}).items():
+            c0, ns0, no0 = by_pred[p]
+            by_pred[p] = (c0 - c, ns0, no0)
+        by_pred = {
+            p: (c, min(max(ns, 1), c), min(max(no, 1), c))
+            for p, (c, ns, no) in by_pred.items()
+            if c > 0
+        }
+        po_top = {
+            (p, o): min(c, by_pred[p][0])
+            for (p, o), c in self.po_top.items()
+            if p in by_pred
+        }
+        total = sum(v[0] for v in by_pred.values())
+        return BgpStats(by_pred, total, po_top)
 
     # -- (de)serialization: stats ride in the store's _meta.json so a
     # loaded graph plans immediately instead of re-scanning a (possibly

@@ -21,11 +21,17 @@ materialized (saved / cached / counted):
         # every per-batch persist created inside the scope is now
         # unpersisted; the snapshot itself is NOT tracked
 
-Without an active scope, `track()` is a no-op passthrough — one-shot
-callers keep the persisted frames alive for the lifetime of the
-returned snapshot (unpersisting early would only force recomputation,
-never break correctness, but the default favors the common case).
+Without an active scope, `track()` is a no-op passthrough: the
+persisted frames stay in the CacheManager until the session ends (or
+the caller unpersists them), even after the returned snapshot is
+dropped — the CacheManager holds them, not the snapshot. Unpersisting
+early would only force recomputation, never break correctness.
 Scopes nest; each scope releases only its own frames.
+
+Only persisted frames may be tracked. A `localCheckpoint`-ed frame
+(such as the novelty an insert on a graph with planner stats
+materializes) is part of the snapshot itself: its blocks cannot be
+recomputed, so unpersisting it would break the snapshot.
 """
 
 from __future__ import annotations
