@@ -15,6 +15,7 @@ from tests.test_lubm_golden import (
     PREFIXES,
     QUERIES,
     load_answers,
+    needs_lubm_data,
 )
 
 
@@ -33,6 +34,7 @@ def lubm_store(spark, tmp_path_factory):
     yield g2
 
 
+@needs_lubm_data
 @pytest.mark.parametrize("n", sorted(QUERIES))
 def test_lubm_store_query(lubm_store, n):
     header, expected = load_answers(n)
@@ -222,6 +224,7 @@ def test_planner_routes_chain_join_to_bucketed_layouts(spark, tmp_path):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
+@needs_lubm_data
 def test_lubm_over_bucketed_store(spark, tmp_path):
     """Real-data end-to-end guard for the bucketed routing: a sample of
     LUBM queries answered over a subject-bucketed store, with routing

@@ -7,6 +7,7 @@ import os
 import pytest
 
 from graphula_spark.sources.ntriples import read_ntriples
+from tests.test_lubm_golden import needs_lubm_data
 
 NT = r"""
 <http://ex.org/a> <http://ex.org/p> <http://ex.org/b> .
@@ -102,6 +103,7 @@ def test_read_nquads(spark, tmp_path):
     assert rows["http://ex/s3"]["g"] is None
 
 
+@needs_lubm_data
 def test_nquads_reads_plain_ntriples_identically(spark):
     import glob
 
@@ -117,6 +119,7 @@ def test_nquads_reads_plain_ntriples_identically(spark):
     assert nt.exceptAll(nq.select("s", "p", "o")).count() == 0
 
 
+@needs_lubm_data
 def test_ntriples_export_roundtrip(spark, tmp_path):
     import glob
 
