@@ -20,9 +20,12 @@ reference's decode fallback ``coalesce(value, '_:' || id)`` for ids
 absent from the dictionary.
 
 Spark-first notes:
-- encode/decode are *joins* against the dict DataFrame, not RPCs; at
-  100 TB the dict is itself distributed and the encode join shuffles
-  on the term string (or broadcasts when small).
+- encode is a pure map (the id is the term hash, see `encode_col`);
+  decode is a *join* against the dict DataFrame, not an RPC. The decode
+  join shuffles the dictionary and never broadcasts it, so the shuffle
+  is shared by every decode of a query and no cached plan pins a
+  hashed copy of the dictionary; at 100 TB a store-backed dictionary
+  decodes through its id-bucketed layout instead (`with_values`).
 - ``F.xxhash64`` is the same XXH64 family the reference uses via
   net.openhft; seed 42 (Spark's default). Ids therefore differ from
   the reference numerically — irrelevant, ids never leave the engine.
@@ -71,7 +74,7 @@ class Dictionary:
         # optional id-bucketed parquet view (persisted stores): decode
         # joins include the partition column so Spark's dynamic partition
         # pruning reads only the buckets the result ids actually hit —
-        # the 100 TB-dictionary decode path (see decode_col)
+        # the 100 TB-dictionary decode path (see with_values)
         self.bucketed_df = bucketed_df
         self.id_buckets = id_buckets
         # driver-side memo for query-constant resolution: query planning
@@ -85,11 +88,11 @@ class Dictionary:
         # False = pathologically many, encode falls back to join.
         self._exceptions: list[tuple[str, int]] | None | bool = exceptions
 
-    #: dictionaries below this row count get an explicit broadcast hint
-    #: on decode joins — robust against conservative session-level
-    #: autoBroadcastJoinThreshold defaults; above it, decode is a
-    #: shuffle join by design (the 100 TB dict is itself distributed)
-    BROADCAST_MAX_ROWS = 5_000_000
+    #: store-backed dictionaries from this row count up decode through
+    #: their id-bucketed parquet layout (see `with_values`); below it,
+    #: and for dictionaries without that layout, decode is a plain
+    #: shuffle-hash join against `df`
+    BUCKETED_DECODE_MIN_ROWS = 5_000_000
 
     #: incremental-union batches below this row count get explicit
     #: broadcast hints in the against-the-dictionary joins (novelty
@@ -97,14 +100,17 @@ class Dictionary:
     #: statically, so without the hint those joins plan SortMergeJoin
     #: and RESHUFFLE THE WHOLE DICTIONARY to add a handful of terms —
     #: probed at a 20M-term dictionary: 102 MB shuffled to register
-    #: ONE term (tools/probe_r8.py). Strings are heavier than ids, so
-    #: the gate is more conservative than BROADCAST_MAX_ROWS.
+    #: ONE term (tools/probe_r8.py).
     BROADCAST_NEW_TERMS_MAX_ROWS = 500_000
 
-    def _broadcastable(self) -> bool:
+    def _bucketed_decode(self) -> bool:
+        """Whether decode joins take the id-bucketed branch: the layout
+        exists and the dictionary has BUCKETED_DECODE_MIN_ROWS rows."""
+        if self.bucketed_df is None or not self.id_buckets:
+            return False
         if self._nrows is None:
             self._nrows = self.df.count()
-        return self._nrows < Dictionary.BROADCAST_MAX_ROWS
+        return self._nrows >= Dictionary.BUCKETED_DECODE_MIN_ROWS
 
     @classmethod
     def empty(cls, spark: SparkSession) -> "Dictionary":
@@ -383,94 +389,59 @@ class Dictionary:
         }
 
     # -- decode ----------------------------------------------------------
-    def decode_col_small(self, df: DataFrame, col: str) -> DataFrame:
-        """Decode an id column of a KNOWN-SMALL, KNOWN-BOUND result
-        slice (caller-gated: e.g. under a small LIMIT, var never
-        unbound): INNER join with the RESULT side broadcast and the
-        dictionary STREAMED. The per-query full-dictionary broadcast
-        build (scan + driver collect + hash relation — ~360k rows per
-        decode at sf0.1, unbounded at 100 TB) drops out of the plan;
-        each decode is one streaming pass over the (cached) dict with
-        a tiny hash table instead (guide §3.1: broadcast the side you
-        KNOW is small; a LEFT OUTER decode can never build on the
-        preserved side, so the join type must change with the sides).
-
-        Soundness: an INNER join loses exactly the rows whose id has
-        no dictionary entry. Solution id vars come from the triple
-        store, whose terms are all dictionary-registered at build
-        (the `_:<id>` fallback in decode_col is defensive, reachable
-        only through store/dictionary mismatch), and the caller gate
-        excludes maybe-unbound vars — so row multiset and values are
-        identical to decode_col's. NULL ids are additionally handled
-        STRUCTURALLY (null-safe join key + a NULL→NULL dict row), so
-        an unbound row decodes to NULL even if a caller's
-        maybe-unbound bookkeeping were incomplete."""
-        tmp = f"__dec_{col}"
-        d = self.df.select(
-            F.col("id").alias("__dec_id"), F.col("value").alias(tmp)
-        ).unionByName(
-            self.spark.range(0, 1, 1, 1).select(
-                F.lit(None).cast("long").alias("__dec_id"),
-                F.lit(None).cast("string").alias(tmp),
-            )
-        )
-        return (
-            d.join(
-                F.broadcast(df),
-                F.col("__dec_id").eqNullSafe(F.col(col)),
-                "inner",
-            )
-            .drop("__dec_id", col)
-            .withColumnRenamed(tmp, col)
-        )
-
-    def decode_col(self, df: DataFrame, col: str, out: str | None = None) -> DataFrame:
-        """Join-decode one id column back to its term string.
+    def with_values(self, df: DataFrame, col: str, out: str) -> DataFrame:
+        """Left-join the id column `col` of `df` to its term string,
+        added as column `out`; `col` is kept. The one decode join.
 
         Ids missing from the dict decode as blank nodes ``_:<id>``
-        (reference: Dictionary.scala:103-119). This is the *late
-        materialization* boundary — call only on final results
-        (reference keeps LazyBinding ids until asked,
-        core/.../LazyBinding.scala:13-28).
+        (reference: Dictionary.scala:103-119).
 
-        Past the broadcast threshold, a store-backed dictionary joins
-        through its id-bucketed parquet layout: the join key includes
-        the partition column (a pure function of the id), so dynamic
-        partition pruning restricts the dictionary scan to the buckets
-        present in the (small) result — instead of shuffling the whole
-        multi-TB dictionary per query.
+        The dictionary side carries a ``shuffle_hash`` hint and is never
+        broadcast. Its shuffle is the same plan for every decode, so all
+        decodes of one query share one dictionary Exchange (the later
+        ones plan as ``ReusedExchange``), and a cached query plan holds
+        no hashed copy of the dictionary.
+
+        Past ``BUCKETED_DECODE_MIN_ROWS``, a store-backed dictionary
+        joins through its id-bucketed parquet layout instead: the join
+        key includes the partition column (a pure function of the id),
+        so dynamic partition pruning restricts the dictionary scan to
+        the buckets present in the (small) result.
         """
-        out = out or col
-        if (
-            self.bucketed_df is not None
-            and self.id_buckets
-            and not self._broadcastable()
-        ):
+        if self._bucketed_decode():
             d = self.bucketed_df.select(
                 F.col("id").alias(col),
                 F.col("id_bucket").alias("__dec_b"),
-                F.col("value").alias(f"__dec_{col}"),
+                F.col("value").alias(out),
             )
-            keyed = df.withColumn(
-                "__dec_b", F.pmod(F.col(col), F.lit(self.id_buckets))
+            joined = (
+                df.withColumn(
+                    "__dec_b", F.pmod(F.col(col), F.lit(self.id_buckets))
+                )
+                .join(d, [col, "__dec_b"], "left")
+                .drop("__dec_b")
             )
-            decoded = keyed.join(d, [col, "__dec_b"], "left").drop("__dec_b")
-            decoded = decoded.withColumn(
-                f"__dec_{col}",
-                F.coalesce(
-                    F.col(f"__dec_{col}"),
-                    F.concat(F.lit("_:"), F.col(col).cast("string")),
-                ),
-            )
-            return decoded.drop(col).withColumnRenamed(f"__dec_{col}", out)
-        d = self.df.select(F.col("id").alias(col), F.col("value").alias(f"__dec_{col}"))
-        if self._broadcastable():
-            d = F.broadcast(d)
-        decoded = df.join(d, col, "left").withColumn(
-            f"__dec_{col}",
+        else:
+            d = self.df.select(
+                F.col("id").alias(col), F.col("value").alias(out)
+            ).hint("shuffle_hash")
+            joined = df.join(d, col, "left")
+        return joined.withColumn(
+            out,
             F.coalesce(
-                F.col(f"__dec_{col}"),
-                F.concat(F.lit("_:"), F.col(col).cast("string")),
+                F.col(out), F.concat(F.lit("_:"), F.col(col).cast("string"))
             ),
         )
-        return decoded.drop(col).withColumnRenamed(f"__dec_{col}", out)
+
+    def decode_col(self, df: DataFrame, col: str, out: str | None = None) -> DataFrame:
+        """Replace the id column `col` with its term string, named `out`
+        (default `col`), through `with_values`. This is the *late
+        materialization* boundary — call only on final results
+        (reference keeps LazyBinding ids until asked,
+        core/.../LazyBinding.scala:13-28)."""
+        tmp = f"__dec_{col}"
+        return (
+            self.with_values(df, col, tmp)
+            .drop(col)
+            .withColumnRenamed(tmp, out or col)
+        )

@@ -581,38 +581,35 @@ class Graph:
         dict_buckets = None
         exceptions = None
         stats = None
+        ops_layout = "sorted"
         if os.path.exists(f"{path}/_meta.json"):
             with open(f"{path}/_meta.json") as fh:
                 meta = json.load(fh)
             p_buckets = meta.get("p_buckets", Graph.P_BUCKETS)
             dict_buckets = meta.get("dict_buckets")
+            ops_layout = meta.get("ops_layout") or ops_layout
             raw_exc = meta.get("dict_exceptions")
             if raw_exc is not None:
                 exceptions = [(v, i) for v, i in raw_exc]
             if "stats" in meta:
                 stats = BgpStats.from_obj(meta["stats"])
-        triples = spark.read.parquet(f"{path}/triples").select(
-            "s", "p", "o", "p_bucket"
+        # explicit schemas: a store saved from an empty graph (or a
+        # streaming delta with no fresh terms) holds no part files to
+        # infer one from
+        spo = "s long, p long, o long"
+        triples = spark.read.schema(f"{spo}, p_bucket int").parquet(
+            f"{path}/triples"
         )
         ops = None
         if os.path.isdir(f"{path}/triples_ops"):
-            ops = spark.read.parquet(f"{path}/triples_ops")
-            # sorted twin carries the p_bucket partition column; the
+            # the sorted twin carries the p_bucket partition column; the
             # z-ordered twin prunes via row-group stats instead
-            cols = ["s", "p", "o"] + (
-                ["p_bucket"] if "p_bucket" in ops.columns else []
-            )
-            ops = ops.select(*cols)
-        try:
-            dict_raw = spark.read.parquet(f"{path}/dict")
-        except Exception:
-            # an EMPTY dictionary parquet (a streaming delta whose
-            # batch carried no fresh terms) writes only _SUCCESS — no
-            # part files to infer a schema from; supply it explicitly
-            schema = "id long, value string" + (
-                ", id_bucket int" if dict_buckets else ""
-            )
-            dict_raw = spark.read.schema(schema).parquet(f"{path}/dict")
+            ops = spark.read.schema(
+                spo if ops_layout == "zorder" else f"{spo}, p_bucket int"
+            ).parquet(f"{path}/triples_ops")
+        dict_raw = spark.read.schema(
+            "id long, value string" + (", id_bucket int" if dict_buckets else "")
+        ).parquet(f"{path}/dict")
         if dict_buckets:
             d = Dictionary(
                 spark,

@@ -331,15 +331,7 @@ class Compiler:
         if var in sol.val_vars:
             return sol, F.col(var).cast("string")
         tmp = self.fresh(f"t_{var}")
-        d = self.graph.dictionary.df.select(
-            F.col("id").alias(var), F.col("value").alias(tmp)
-        )
-        if self.graph.dictionary._broadcastable():
-            d = F.broadcast(d)
-        df = sol.df.join(d, var, "left").withColumn(
-            tmp,
-            F.coalesce(F.col(tmp), F.concat(F.lit("_:"), F.col(var).cast("string"))),
-        )
+        df = self.graph.dictionary.with_values(sol.df, var, tmp)
         return Solution(
             df, sol.id_vars, sol.val_vars, sol.maybe_unbound,
             sol.computed_vars,

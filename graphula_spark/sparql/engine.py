@@ -18,12 +18,6 @@ from graphula_spark.sparql import algebra as A
 from graphula_spark.sparql.compiler import CE, Compiler, Solution, has_aggregates
 from graphula_spark.sparql.parser import parse_sparql
 
-#: LIMIT(+OFFSET) gate for the small-slice decode path: below this
-#: many result rows the final dictionary decode runs AFTER the slice
-#: with the RESULT side broadcast (decode_col_small) — the
-#: full-dictionary broadcast build per query drops out of the plan
-SMALL_SLICE_DECODE_MAX_ROWS = 1000
-
 
 def execute_sparql(graph, query: str, dataset=None, parsed=None) -> DataFrame:
     q = parsed if parsed is not None else parse_sparql(query)
@@ -627,23 +621,7 @@ def _execute_select(graph, c: Compiler, q: A.SelectQuery) -> DataFrame:
                 order_tmp.append(k)
 
     # decode projected id vars (the one final dict join per column)
-    decode_vars = [v for v in out_cols if v in sol.id_vars]
-    # small-slice decode (round 15, guide §3.1): with a small LIMIT
-    # and no DISTINCT, decode AFTER the slice — each dict join then
-    # BROADCASTS the ≤-limit result rows and STREAMS the dictionary,
-    # instead of building a full-dictionary broadcast per query and
-    # decoding every pre-limit row. Gated off maybe-unbound vars
-    # (NULL ids need decode_col's outer-join fallback) and DISTINCT
-    # (the dedup domain must stay the decoded strings).
-    defer_decode = (
-        bool(decode_vars)
-        and q.limit is not None
-        and not q.distinct
-        and (q.limit + (q.offset or 0)) <= SMALL_SLICE_DECODE_MAX_ROWS
-        and not (set(decode_vars) & sol.maybe_unbound)
-    )
-    if not defer_decode:
-        sol = c.materialize(sol, decode_vars)
+    sol = c.materialize(sol, [v for v in out_cols if v in sol.id_vars])
 
     df = sol.df.select(*(out_cols + order_tmp))
     if q.distinct:
@@ -653,20 +631,9 @@ def _execute_select(graph, c: Compiler, q: A.SelectQuery) -> DataFrame:
         df = df.dropDuplicates()
     if sort_cols:
         df = df.orderBy(*sort_cols)
-    if not defer_decode:
-        df = df.select(*out_cols)
-        if q.offset:
-            df = df.offset(q.offset)
-        if q.limit is not None:
-            df = df.limit(q.limit)
-        return df
+    df = df.select(*out_cols)
     if q.offset:
         df = df.offset(q.offset)
-    df = df.limit(q.limit)
-    for v in decode_vars:
-        df = c.graph.dictionary.decode_col_small(df, v)
-    if sort_cols:
-        # the decode joins do not preserve the slice's row order;
-        # re-sorting ≤ limit rows restores ORDER BY semantics
-        df = df.orderBy(*sort_cols)
-    return df.select(*out_cols)
+    if q.limit is not None:
+        df = df.limit(q.limit)
+    return df

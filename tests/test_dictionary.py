@@ -100,10 +100,10 @@ def test_forced_collision_build_and_union(spark, monkeypatch):
 
 
 def test_bucketed_decode_path(spark, tmp_path, monkeypatch):
-    """A store-backed dictionary past the broadcast threshold decodes
-    through the id-bucketed layout: values identical to the broadcast
-    path, and the join carries the partition column so the dict scan is
-    prunable to the result's buckets."""
+    """A store-backed dictionary past BUCKETED_DECODE_MIN_ROWS decodes
+    through the id-bucketed layout: values identical to the plain
+    decode join, and the join carries the partition column so the dict
+    scan is prunable to the result's buckets."""
     import graphula_spark.dictionary as D
     from graphula_spark.graph import Graph
     from graphula_spark.plans.bgp import TriplePattern, Var
@@ -119,14 +119,14 @@ def test_bucketed_decode_path(spark, tmp_path, monkeypatch):
 
     X, Y = Var("X"), Var("Y")
     expected = {(f"s{i}", f"o{i}") for i in range(20)}
-    # broadcast path
+    # plain decode join
     got_b = {
         (r["X"], r["Y"])
         for r in g2.execute_bgp_decoded([TriplePattern(X, "p", Y)]).collect()
     }
     assert got_b == expected
     # force the bucketed join path
-    monkeypatch.setattr(D.Dictionary, "BROADCAST_MAX_ROWS", 0)
+    monkeypatch.setattr(D.Dictionary, "BUCKETED_DECODE_MIN_ROWS", 0)
     decoded = g2.execute_bgp_decoded([TriplePattern(X, "p", Y)])
     got = {(r["X"], r["Y"]) for r in decoded.collect()}
     assert got == expected

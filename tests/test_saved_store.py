@@ -1,6 +1,7 @@
-"""A saved store: the row order of both on-disk triple copies, and the
+"""A saved store: the row order of both on-disk triple copies, the
 planner stats that INSERT DATA / DELETE DATA snapshots of it carry
-(`BgpStats.with_delta`) instead of recomputing over the whole store."""
+(`BgpStats.with_delta`) instead of recomputing over the whole store,
+the shape of the result decode, and the empty store."""
 
 import glob
 import random
@@ -150,3 +151,96 @@ def test_with_delta_clips_and_drops():
     assert out.po_top == {(1, 5): 5}
     with pytest.raises(ValueError):
         BgpStats({}, 0, complete=False).with_delta(added={1: (1, 1, 1)})
+
+
+# -- decode plan shape --------------------------------------------------
+
+
+def _children(node) -> list:
+    """Child nodes of a physical plan node, through the AQE wrapper, its
+    query stages and reused exchanges."""
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if cls.endswith("QueryStageExec"):
+        return [node.plan()]
+    if cls == "ReusedExchangeExec":
+        return [node.child()]
+    seq = node.children()
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def _nodes(node):
+    stack = [node]
+    while stack:
+        n = stack.pop()
+        yield n
+        stack.extend(_children(n))
+
+
+def _scans_dir(node, directory: str) -> bool:
+    """Whether a file scan under `node` reads `directory`."""
+    for n in _nodes(node):
+        if n.getClass().getSimpleName() == "FileSourceScanExec":
+            roots = n.relation().location().rootPaths()
+            for i in range(roots.size()):
+                if roots.apply(i).toString().rstrip("/").endswith(directory):
+                    return True
+    return False
+
+
+@pytest.mark.parametrize(
+    "query, expected",
+    [
+        (
+            f"SELECT ?s ?o WHERE {{ ?s <{EX}type> ?o }}",
+            {(f"{EX}s{i}", f"{EX}C{i % 3}") for i in range(60)},
+        ),
+        (
+            f"SELECT ?p ?o WHERE {{ <{EX}s1> ?p ?o }}",
+            {
+                (f"{EX}name", '"n1"'),
+                (f"{EX}type", f"{EX}C1"),
+                (f"{EX}rare", '"r1"'),
+                # _base_triples' second draw from Random(7)
+                (f"{EX}knows", f"{EX}s9"),
+            },
+        ),
+        (
+            f'SELECT ?s ?n WHERE {{ ?s <{EX}name> ?n FILTER(STRSTARTS(?n, "n5")) }} '
+            "ORDER BY DESC(?n) LIMIT 3",
+            [(f"{EX}s59", '"n59"'), (f"{EX}s58", '"n58"'), (f"{EX}s57", '"n57"')],
+        ),
+    ],
+    ids=["two-columns", "bound-subject", "filter-order-limit"],
+)
+def test_decode_never_broadcasts_the_dictionary(spark, small_store, query, expected):
+    """Result decode joins the dictionary without broadcasting it, so a
+    cached plan pins no hashed copy of the dictionary."""
+    path, _ = small_store
+    df = Graph.load(spark, path).sparql(query)
+    rows = [tuple(r) for r in df.collect()]
+    if isinstance(expected, list):
+        assert rows == expected
+    else:
+        assert len(rows) == len(expected) and set(rows) == expected
+    plan = df._jdf.queryExecution().executedPlan()
+    dict_dir = f"{path}/dict"
+    assert _scans_dir(plan, dict_dir)
+    broadcasts = [
+        n
+        for n in _nodes(plan)
+        if n.getClass().getSimpleName() == "BroadcastExchangeExec"
+    ]
+    assert not [b for b in broadcasts if _scans_dir(b, dict_dir)]
+
+
+# -- empty store --------------------------------------------------------
+
+
+def test_empty_graph_saves_loads_and_queries(spark, tmp_path):
+    store = str(tmp_path / "empty")
+    empty = spark.createDataFrame([], "s string, p string, o string")
+    Graph.from_string_triples(spark, empty).save(store)
+    g = Graph.load(spark, store)
+    assert g.sparql("SELECT ?s ?o WHERE { ?s ?p ?o }").collect() == []

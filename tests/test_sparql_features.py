@@ -2937,14 +2937,10 @@ def test_term_fns_cartesian_slivers_null_bounded(spark):
         )
 
 
-def test_small_slice_decode_matches_full_decode(spark):
-    """Round 15: under a small LIMIT the final dictionary decode runs
-    AFTER the slice with the result side broadcast and the dictionary
-    streamed (decode_col_small). Pin equivalence against the
-    full-decode path (gate forced off) — same rows, same order — and
-    that NULL-tolerant (maybe-unbound) projections keep the old path."""
-    from graphula_spark.sparql import engine as eng
-
+def test_ordered_limit_decode_and_optional_null_decode(spark):
+    """The final decode under ORDER BY + LIMIT keeps the slice's rows
+    and their order, and a maybe-unbound (OPTIONAL) projection decodes
+    NULL as unbound."""
     triples = [(f"s{i:02d}", "p", f"o{i:02d}") for i in range(20)]
     triples += [("s00", "q", "extra")]
     g = Graph.from_string_triples(
@@ -2953,17 +2949,12 @@ def test_small_slice_decode_matches_full_decode(spark):
         cache=False,
     )
     q = "SELECT ?s ?o WHERE { ?s <p> ?o } ORDER BY DESC(?o) LIMIT 7"
-    deferred = [tuple(r) for r in g.sparql(q).collect()]
-    g2 = Graph(spark, g.triples, g.dictionary)  # fresh plan cache
-    old = eng.SMALL_SLICE_DECODE_MAX_ROWS
-    try:
-        eng.SMALL_SLICE_DECODE_MAX_ROWS = -1  # force the full-decode path
-        full = [tuple(r) for r in g2.sparql(q).collect()]
-    finally:
-        eng.SMALL_SLICE_DECODE_MAX_ROWS = old
-    assert deferred == full  # ordered comparison: LIMIT+ORDER semantics
-    # maybe-unbound projection (OPTIONAL) stays on the outer-join path
-    # and still decodes NULL as unbound
+    rows = [tuple(r) for r in g.sparql(q).collect()]
+    assert rows == [
+        ("s19", "o19"), ("s18", "o18"), ("s17", "o17"), ("s16", "o16"),
+        ("s15", "o15"), ("s14", "o14"), ("s13", "o13"),
+    ]
+    # maybe-unbound projection (OPTIONAL) decodes NULL as unbound
     qo = (
         "SELECT ?s ?x WHERE { ?s <p> ?o . OPTIONAL { ?s <q> ?x } } "
         "ORDER BY ?s LIMIT 3"

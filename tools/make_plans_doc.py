@@ -59,30 +59,30 @@ p = plan_of(sig)
 out.append("## 4. MinHash signatures\n")
 out.append(f"```\nExchanges: {p.count('Exchange')} (single repartition of the 5k-doc scan; zero aggregation shuffles — signatures are per-row array folds)\n```\n")
 
-# 5. bucketed-dictionary decode join (round 2): force the non-broadcast
-# path and show the id_bucket partition column riding the join
+# 5. bucketed-dictionary decode join (round 2): force the bucketed
+# branch and show the id_bucket partition column riding the join
 import graphula_spark.dictionary as D
 
-saved_thresh = D.Dictionary.BROADCAST_MAX_ROWS
-D.Dictionary.BROADCAST_MAX_ROWS = 0
+saved_thresh = D.Dictionary.BUCKETED_DECODE_MIN_ROWS
+D.Dictionary.BUCKETED_DECODE_MIN_ROWS = 0
 try:
     dec = g.execute_bgp_decoded([TriplePattern(X, "c_name", Y)])
     dec.count()
     p = plan_of(dec)
     has_bucket = "id_bucket" in p
     dyn = "dynamicpruning" in p.lower()
-    out.append("## 5. Decode join past the broadcast threshold (id-bucketed dict layout)\n")
+    out.append("## 5. Decode join past the bucketed-decode gate (id-bucketed dict layout)\n")
     out.append(
         f"```\njoin key includes id_bucket partition column: {has_bucket}\n"
         f"dynamic partition pruning expression present: {dyn}\n```\n"
     )
     out.append(
-        "With the dictionary too big to broadcast, the decode join carries "
+        "Past the bucketed-decode gate, the decode join carries "
         "`pmod(id, 64)` so the dict scan prunes to the buckets the result "
         "ids hit — the whole dictionary is never shuffled.\n"
     )
 finally:
-    D.Dictionary.BROADCAST_MAX_ROWS = saved_thresh
+    D.Dictionary.BUCKETED_DECODE_MIN_ROWS = saved_thresh
 
 # 6. lineitem triple-izer — no global sort (round-2 fix)
 from graphula_spark.sources.relational import lineitem_to_triples
