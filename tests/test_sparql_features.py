@@ -2937,10 +2937,10 @@ def test_term_fns_cartesian_slivers_null_bounded(spark):
         )
 
 
-def test_ordered_limit_decode_and_optional_null_decode(spark):
+def test_small_slice_decode_matches_full_decode(spark):
     """The final decode under ORDER BY + LIMIT keeps the slice's rows
-    and their order, and a maybe-unbound (OPTIONAL) projection decodes
-    NULL as unbound."""
+    and their order (the same rows as the head of the unsliced decode),
+    and a maybe-unbound (OPTIONAL) projection decodes NULL as unbound."""
     triples = [(f"s{i:02d}", "p", f"o{i:02d}") for i in range(20)]
     triples += [("s00", "q", "extra")]
     g = Graph.from_string_triples(
@@ -2954,6 +2954,13 @@ def test_ordered_limit_decode_and_optional_null_decode(spark):
         ("s19", "o19"), ("s18", "o18"), ("s17", "o17"), ("s16", "o16"),
         ("s15", "o15"), ("s14", "o14"), ("s13", "o13"),
     ]
+    full = [
+        tuple(r)
+        for r in g.sparql(
+            "SELECT ?s ?o WHERE { ?s <p> ?o } ORDER BY DESC(?o)"
+        ).collect()
+    ]
+    assert rows == full[:7]
     # maybe-unbound projection (OPTIONAL) decodes NULL as unbound
     qo = (
         "SELECT ?s ?x WHERE { ?s <p> ?o . OPTIONAL { ?s <q> ?x } } "
