@@ -81,8 +81,7 @@ def _lineitem_graph(spark: SparkSession, sf_dir: str):
                 spark, lineitem_to_triples(df), cache=False,
                 assume_distinct=True,
             )
-            # lineitem queries bind predicates, not objects — skip OPS copy
-            g.save(store, include_ops=False)
+            g.save(store)
             open(marker, "w").write("ok")
         g = Graph.load(spark, store)
         g.stats

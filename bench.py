@@ -87,9 +87,9 @@ def timed_median(run, warmup: int, name: str) -> tuple[float, int]:
         n = run()
     samples = []
     for _ in range(TIMED_RUNS):
-        t0 = time.time()
+        t0 = time.perf_counter()
         n = run()
-        samples.append(time.time() - t0)
+        samples.append(time.perf_counter() - t0)
     samples.sort()
     med = samples[len(samples) // 2]
     spread = (
@@ -181,14 +181,14 @@ def _timed_cold_build(spark, sf_dir: str) -> float:
         Graph.from_string_triples(
             spark, lineitem_to_triples(df), cache=False,
             assume_distinct=True,
-        ).save(f"{scratch}/lineitem", include_ops=False)
+        ).save(f"{scratch}/lineitem")
 
-    t0 = time.time()
+    t0 = time.perf_counter()
     try:
         with ThreadPoolExecutor(max_workers=2) as pool:
             for f in [pool.submit(build_tpch), pool.submit(build_lineitem)]:
                 f.result()
-        return time.time() - t0
+        return time.perf_counter() - t0
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -232,10 +232,10 @@ def main() -> None:
             f.result()
     entry_mod._GRAPH_CACHE.pop(("tpch", sf_dir), None)
     entry_mod._GRAPH_CACHE.pop(("lineitem", sf_dir), None)
-    t0 = time.time()
+    t0 = time.perf_counter()
     entry_mod._graph(spark, sf_dir)
     entry_mod._lineitem_graph(spark, sf_dir)
-    graph_load = time.time() - t0
+    graph_load = time.perf_counter() - t0
 
     # JMH-style warmup (the reference's suite uses JMH @Warmup
     # iterations, benchmarks/.../LubmGraphula.scala): one untimed pass
@@ -259,9 +259,9 @@ def main() -> None:
     floor_df.count()
     samples = []
     for _ in range(7):
-        t0 = time.time()
+        t0 = time.perf_counter()
         floor_df.count()
-        samples.append(time.time() - t0)
+        samples.append(time.perf_counter() - t0)
     floor_s = sorted(samples)[len(samples) // 2]
     floor_df.unpersist()
     print(f"# floor: {floor_s*1000:.0f}ms per no-op job", file=sys.stderr)
@@ -340,12 +340,12 @@ def main() -> None:
     # excluded from sections/total like the other build keys.
     try:
         bkt_loc = "/tmp/graphula_tpch_bucketed/" + sf_dir.strip("/").replace("/", "_")
-        t0 = time.time()
+        t0 = time.perf_counter()
         if os.path.exists(f"{bkt_loc}/_bucket_meta.json"):
             tpch.register_bucketed(spark, bkt_loc)
         else:
             tpch.save_bucketed(spark, sf_dir, bkt_loc, prefix="benchbkt")
-        per_query["bucketed_build_s"] = round(time.time() - t0, 3)
+        per_query["bucketed_build_s"] = round(time.perf_counter() - t0, 3)
         for qname in ("tpch_q3", "tpch_q18", "tpch_q21"):
             fn = tpch.QUERIES[qname]
             dt, _ = timed_median(
@@ -375,11 +375,11 @@ def main() -> None:
         # re-planning (each adaptive round is an extra scheduling hop,
         # ~0.15s/query here); a 100 TB store session keeps AQE on
         spark.conf.set("spark.sql.adaptive.enabled", "false")
-        t0 = time.time()
+        t0 = time.perf_counter()
         g = Graph.from_ntriples(spark, lubm_paths)
         n_triples = g.triples.count()
         g.stats  # planner stats, computed once like the reference's
-        load_s = time.time() - t0
+        load_s = time.perf_counter() - t0
         per_query["lubm_load"] = round(load_s, 3)
         print(
             f"# lubm_load: {n_triples} triples, {n_triples/load_s:,.0f} triples/s",
@@ -506,8 +506,8 @@ def section_sums(per_query: dict) -> dict:
 
 def store_sizes(sf_dir: str) -> dict:
     """On-disk bytes per persisted store component for THIS run's
-    scale factor (the storage side of the 100 TB story: SPO vs OPS
-    twin vs dictionary). Missing paths are skipped."""
+    scale factor (the storage side of the 100 TB story: triples vs
+    dictionary). Missing paths are skipped."""
     sizes: dict[str, int] = {}
     want = sf_dir.strip("/").replace("/", "_")
 
@@ -526,7 +526,7 @@ def store_sizes(sf_dir: str) -> dict:
         for tag in os.listdir(base):
             if not tag.startswith(want):
                 continue
-            for comp in ("triples", "triples_ops", "dict"):
+            for comp in ("triples", "dict"):
                 p = os.path.join(base, tag, comp)
                 if os.path.isdir(p):
                     sizes[f"{tag}/{comp}"] = du(p)
@@ -629,9 +629,9 @@ def ensure_sf1(spark, base_dir: str, out_dir: str = "/tmp/graphula_sf1") -> str:
 def run_sf1_probe(spark, base_dir, queries, warmup) -> dict:
     from graphula_spark import tpch
 
-    t0 = time.time()
+    t0 = time.perf_counter()
     sf1_dir = ensure_sf1(spark, base_dir)
-    prep_s = time.time() - t0
+    prep_s = time.perf_counter() - t0
     out: dict[str, float] = {}
     for name in SF1_QUERIES:
         fn = queries.get(name) or tpch.QUERIES[name]

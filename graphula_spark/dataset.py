@@ -630,7 +630,7 @@ class Dataset:
         )
 
     # ------------------------------------------------------------------
-    def save(self, path: str, include_ops: bool = False) -> None:
+    def save(self, path: str) -> None:
         """Persist the dataset: the union graph goes through Graph.save
         (predicate-bucketed triples + id-bucketed dictionary + meta —
         the union view is the common serving mode, so materializing it
@@ -638,7 +638,7 @@ class Dataset:
         source of truth is a `quads/` table with the same p_bucket
         partitioning so per-graph pattern scans prune identically."""
         union = self.union_graph()
-        union.save(path, include_ops=include_ops)
+        union.save(path)
         (
             self.quads.withColumn(
                 "p_bucket", F.pmod(F.col("p"), F.lit(Graph.P_BUCKETS))

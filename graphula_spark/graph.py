@@ -2,10 +2,13 @@
 
 Reference parity: the ``Graphula`` class (core/.../Graphula.scala) owns
 the LMDB env, index, dictionary and exposes execute/count; here the
-state is a pair of DataFrames plus driver-cached stats. Storage layout
-for persisted graphs is Parquet partitioned by a hash-bucket of ``p``
+state is a pair of DataFrames plus driver-cached stats. A persisted
+graph keeps one copy of its triples: Parquet partitioned by a
+hash-bucket of ``p`` and sorted (p, s, o) within each file
 (predicate-first, matching the reference index's p → s → o priority,
-Index.scala:61-78) so bound-predicate scans prune partitions.
+Index.scala:61-78), so every bound-predicate scan, o-bound ones
+included, prunes partitions. The reference's other index permutations
+are not copied.
 """
 
 from __future__ import annotations
@@ -36,7 +39,6 @@ class Graph:
         triples: DataFrame,
         dictionary: Dictionary,
         stats: BgpStats | None = None,
-        triples_ops: DataFrame | None = None,
         p_buckets: int | None = None,
         triples_s: DataFrame | None = None,
     ):
@@ -44,9 +46,6 @@ class Graph:
         self.triples = triples
         self.dictionary = dictionary
         self._stats = stats
-        #: optional o-clustered copy (OPS permutation analogue) used for
-        #: bound-object pattern scans
-        self.triples_ops = triples_ops
         #: optional subject-BUCKETED table copy (save_bucketed_table):
         #: the planner reroutes big scans joining on their subject here
         #: so star joins co-partition instead of shuffling
@@ -56,7 +55,8 @@ class Graph:
         #: joins (one side's o = the other's s) co-partition too
         self.triples_o: DataFrame | None = None
         #: bucket count of the persisted predicate-partitioned layout
-        #: (None for in-memory graphs; read back from _meta on load)
+        #: (None for in-memory graphs; read back from _meta on load, and
+        #: handed on to update snapshots, which keep the p_bucket column)
         self.p_buckets = p_buckets
         #: compiled-plan cache for `sparql()` (prepared-statement
         #: style): a Graph is an immutable snapshot, so the compiled
@@ -185,22 +185,45 @@ class Graph:
             )
         else:
             fresh = new_triples.join(spo, ["s", "p", "o"], "left_anti")
-        if not self._carries_stats():
-            return Graph(self.spark, spo.unionByName(fresh), d2)
-        # carry the planner stats: materialize the batch-sized novelty
-        # once (a checkpoint, not a persist — a cached plan would pin
-        # the broadcasts above for the session) and add its
-        # per-predicate figures to the parent's
-        fresh = fresh.localCheckpoint(eager=True)
-        added = {
-            r["p"]: (r["cnt"], r["ns"], r["no"])
-            for r in BgpStats.per_pred(fresh).collect()
-        }
+        stats = None
+        if self._carries_stats():
+            # carry the planner stats: materialize the batch-sized
+            # novelty once (a checkpoint, not a persist — a cached plan
+            # would pin the broadcasts above for the session) and add
+            # its per-predicate figures to the parent's
+            fresh = fresh.localCheckpoint(eager=True)
+            added = {
+                r["p"]: (r["cnt"], r["ns"], r["no"])
+                for r in BgpStats.per_pred(fresh).collect()
+            }
+            stats = self._stats.with_delta(added=added)
         return Graph(
             self.spark,
-            spo.unionByName(fresh),
+            self.triples.select(*self._layout_cols()).unionByName(
+                self._with_p_bucket(fresh)
+            ),
             d2,
-            stats=self._stats.with_delta(added=added),
+            stats=stats,
+            p_buckets=self.p_buckets,
+        )
+
+    def _layout_cols(self) -> list[str]:
+        """The triple columns an update snapshot keeps: (s, p, o), plus
+        the store's p_bucket partition column when these triples carry
+        one, so bound-predicate scans on the snapshot still prune."""
+        if "p_bucket" in self.triples.columns:
+            return ["s", "p", "o", "p_bucket"]
+        return ["s", "p", "o"]
+
+    def _with_p_bucket(self, spo: DataFrame) -> DataFrame:
+        """New (s, p, o) rows in this graph's layout: with a p_bucket
+        column computed by the store's own modulus when the stored
+        triples carry one (`_pattern_scan` prunes with `p_buckets`)."""
+        if "p_bucket" not in self.triples.columns:
+            return spo
+        n = self.p_buckets or Graph.P_BUCKETS
+        return spo.withColumn(
+            "p_bucket", F.pmod(F.col("p"), F.lit(n)).cast("int")
         )
 
     def _carries_stats(self) -> bool:
@@ -370,24 +393,27 @@ class Graph:
             if n_victims <= Graph.INSERT_BROADCAST_MAX_ROWS
             else victims
         )
-        spo = self.triples.select("s", "p", "o")
-        remaining = spo.join(right, ["s", "p", "o"], "left_anti")
-        if not self._carries_stats():
-            return Graph(self.spark, remaining, self.dictionary)
-        # carry the planner stats: one corpus-streaming pass counts the
-        # victims actually stored, per predicate
-        removed = {
-            r["p"]: r["cnt"]
-            for r in spo.join(right, ["s", "p", "o"], "left_semi")
-            .groupBy("p")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
+        stats = None
+        if self._carries_stats():
+            # carry the planner stats: one corpus-streaming pass counts
+            # the victims actually stored, per predicate
+            removed = {
+                r["p"]: r["cnt"]
+                for r in self.triples.select("s", "p", "o")
+                .join(right, ["s", "p", "o"], "left_semi")
+                .groupBy("p")
+                .agg(F.count(F.lit(1)).alias("cnt"))
+                .collect()
+            }
+            stats = self._stats.with_delta(removed=removed)
         return Graph(
             self.spark,
-            remaining,
+            self.triples.select(*self._layout_cols()).join(
+                right, ["s", "p", "o"], "left_anti"
+            ),
             self.dictionary,
-            stats=self._stats.with_delta(removed=removed),
+            stats=stats,
+            p_buckets=self.p_buckets,
         )
 
     # -- persistence -----------------------------------------------------
@@ -396,54 +422,35 @@ class Graph:
     #: id-hash bucket count for the persisted dictionary layout
     DICT_BUCKETS = 64
 
-    def save(
-        self,
-        path: str,
-        p_buckets: int | None = None,
-        include_ops: bool = True,
-        ops_layout: str = "sorted",
-        ops_row_group_bytes: int | None = None,
-    ) -> None:
+    def save(self, path: str, p_buckets: int | None = None) -> None:
         """Persist predicate-first: partition dir = hash bucket of p.
 
         At 100 TB a bound-predicate pattern scan then prunes to 1/64 of
         the data before any IO — the Parquet analogue of the reference's
         (0,p,0) index key (Index.scala:61-78). Rows are sorted by
         (p, s, o) within each partition file so parquet min/max
-        row-group stats prune bound-subject scans too. Both sorts lead
+        row-group stats prune bound-subject scans too. The sort leads
         with the partition column: the partitioned write sorts by it,
         and a sort that does not start with it is replaced, losing the
         row order.
 
-        ``ops_layout`` picks the OPS twin's physical layout:
-        ``"sorted"`` (default) keeps the p_bucket partitioning with
-        rows sorted (p, o, s) — best when o-bound scans also bind p;
-        ``"zorder"`` clusters the twin on the Z-order curve of (p, o)
-        instead (operators/layout.py), so row groups carry tight
-        min/max envelopes on BOTH columns: one copy then serves
-        p-bound, o-bound, and (p,o)-bound scans via row-group pruning
-        without any partition-count explosion — the multi-predicate
-        scan regime. ``ops_row_group_bytes`` shrinks the twin's parquet
-        row groups for finer pruning (tests; at scale the default
-        128MB is right).
+        The store keeps ONE copy of the triples. An o-bound scan reads
+        its predicate's p_bucket partition like any other bound-p scan;
+        the reference's other index permutations are not copied, since
+        a second, (p, o, s)-sorted copy pruned no row group on the
+        workloads measured (ROADMAP, D8).
 
         The store build is ONE pass over the encode lineage: the
         dictionary and the bucket-shuffled encoded triples are persisted
         (memory-and-disk — at 100 TB the cache spills rather than
         recomputing a multi-PB lineage), materialized once, then the
-        SPO copy, the OPS copy and the dictionary are written as
-        CONCURRENT jobs from the cached partitions. The OPS copy
-        (reference 8-way permutation analogue, Index.scala:61-78 rows
-        (0,p,o)/(0,0,o)) needs no second shuffle — it shares the
-        p_bucket partitioning and only re-sorts within partitions.
-        Workloads that never bind o skip it via include_ops=False.
+        triples and the dictionary are written as CONCURRENT jobs from
+        the cached partitions.
         """
         from concurrent.futures import ThreadPoolExecutor
 
         from pyspark import StorageLevel
 
-        if ops_layout not in ("sorted", "zorder"):
-            raise ValueError(f"unknown ops_layout {ops_layout!r}")
         p_buckets = p_buckets or Graph.P_BUCKETS
         dict_df = self.dictionary.df
         dict_was_cached = dict_df.storageLevel != StorageLevel.NONE
@@ -467,24 +474,6 @@ class Graph:
                     .write.mode("overwrite")
                     .partitionBy("p_bucket")
                     .parquet(f"{path}/triples")
-                )
-
-            def write_ops() -> None:
-                if ops_layout == "zorder":
-                    from graphula_spark.operators.layout import zorder_write
-
-                    zorder_write(
-                        bucketed.select("s", "p", "o"),
-                        f"{path}/triples_ops",
-                        by=["p", "o"],
-                        row_group_bytes=ops_row_group_bytes,
-                    )
-                    return
-                (
-                    bucketed.sortWithinPartitions("p_bucket", "p", "o", "s")
-                    .write.mode("overwrite")
-                    .partitionBy("p_bucket")
-                    .parquet(f"{path}/triples_ops")
                 )
 
             def write_dict() -> None:
@@ -521,9 +510,7 @@ class Graph:
             def compute_exc() -> None:
                 exc_box.append(self.dictionary._get_exceptions())
 
-            jobs = [write_spo, write_dict, compute_stats, compute_exc] + (
-                [write_ops] if include_ops else []
-            )
+            jobs = [write_spo, write_dict, compute_stats, compute_exc]
             with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
                 for fut in [pool.submit(j) for j in jobs]:
                     fut.result()
@@ -541,7 +528,6 @@ class Graph:
         meta = {
             "p_buckets": p_buckets,
             "layout": "pmod(p)",
-            "ops_layout": ops_layout if include_ops else None,
             "dict_buckets": Graph.DICT_BUCKETS,
         }
         stats_obj = self._stats.to_obj()
@@ -581,13 +567,11 @@ class Graph:
         dict_buckets = None
         exceptions = None
         stats = None
-        ops_layout = "sorted"
         if os.path.exists(f"{path}/_meta.json"):
             with open(f"{path}/_meta.json") as fh:
                 meta = json.load(fh)
             p_buckets = meta.get("p_buckets", Graph.P_BUCKETS)
             dict_buckets = meta.get("dict_buckets")
-            ops_layout = meta.get("ops_layout") or ops_layout
             raw_exc = meta.get("dict_exceptions")
             if raw_exc is not None:
                 exceptions = [(v, i) for v, i in raw_exc]
@@ -596,17 +580,9 @@ class Graph:
         # explicit schemas: a store saved from an empty graph (or a
         # streaming delta with no fresh terms) holds no part files to
         # infer one from
-        spo = "s long, p long, o long"
-        triples = spark.read.schema(f"{spo}, p_bucket int").parquet(
-            f"{path}/triples"
-        )
-        ops = None
-        if os.path.isdir(f"{path}/triples_ops"):
-            # the sorted twin carries the p_bucket partition column; the
-            # z-ordered twin prunes via row-group stats instead
-            ops = spark.read.schema(
-                spo if ops_layout == "zorder" else f"{spo}, p_bucket int"
-            ).parquet(f"{path}/triples_ops")
+        triples = spark.read.schema(
+            "s long, p long, o long, p_bucket int"
+        ).parquet(f"{path}/triples")
         dict_raw = spark.read.schema(
             "id long, value string" + (", id_bucket int" if dict_buckets else "")
         ).parquet(f"{path}/dict")
@@ -622,9 +598,7 @@ class Graph:
             d = Dictionary(
                 spark, dict_raw.select("id", "value"), exceptions=exceptions
             )
-        return cls(
-            spark, triples, d, stats=stats, triples_ops=ops, p_buckets=p_buckets
-        )
+        return cls(spark, triples, d, stats=stats, p_buckets=p_buckets)
 
     # ------------------------------------------------------------------
     # bucketed-table layout (big-big subject joins without shuffles)
@@ -786,7 +760,6 @@ class Graph:
             patterns,
             self._const_ids(patterns),
             self.stats,
-            triples_ops=self.triples_ops,
             p_buckets=self.p_buckets,
             triples_s=self.triples_s,
             triples_o=self.triples_o,

@@ -686,7 +686,6 @@ def execute_bgp(
     patterns: list[TriplePattern],
     const_ids: dict[str, int],
     stats: BgpStats | None = None,
-    triples_ops: DataFrame | None = None,
     p_buckets: int | None = None,
     triples_s: DataFrame | None = None,
     triples_o: DataFrame | None = None,
@@ -730,25 +729,22 @@ def execute_bgp(
                 var_use[v] = var_use.get(v, 0) + 1
         join_vars = {v for v, n in var_use.items() if n >= 2}
 
-    def _routed_scan(i: int, card: float) -> DataFrame:
-        pat = patterns[i]
-        src, routed = triples, False
+    def _routed_scan(i: int, pat: TriplePattern, card: float) -> DataFrame:
+        src = triples
         if card >= BUCKETED_SCAN_MIN_EST:
             if (
                 triples_s is not None
                 and isinstance(pat.s, Var)
                 and pat.s.name in join_vars
             ):
-                src, routed = triples_s, True
+                src = triples_s
             elif (
                 triples_o is not None
                 and isinstance(pat.o, Var)
                 and pat.o.name in join_vars
             ):
-                src, routed = triples_o, True
-        return _pattern_scan(
-            src, pat, const_ids, i, None if routed else triples_ops, p_buckets
-        )
+                src = triples_o
+        return _pattern_scan(src, pat, const_ids, i, p_buckets)
 
     # bushy join tree, only when the DP predicts a clear win over the
     # left-deep order (diamond-shaped BGPs with selective ends); the
@@ -760,7 +756,7 @@ def execute_bgp(
             if isinstance(node, int):
                 card = planner._est(patterns[node], set(), const_ids)
                 return (
-                    _routed_scan(node, card),
+                    _routed_scan(node, patterns[node], card),
                     {v for _, v in patterns[node].vars()},
                 )
             ldf, lv = _build(node[0])
@@ -775,26 +771,7 @@ def execute_bgp(
     result_est = 0.0
     bound: set[str] = set()
     for i, (pat, card) in enumerate(ordered):
-        src = triples
-        routed = False
-        if card >= BUCKETED_SCAN_MIN_EST:
-            if (
-                triples_s is not None
-                and isinstance(pat.s, Var)
-                and pat.s.name in join_vars
-            ):
-                src, routed = triples_s, True
-            elif (
-                triples_o is not None
-                and isinstance(pat.o, Var)
-                and pat.o.name in join_vars
-            ):
-                src, routed = triples_o, True
-        # a routing decision must not be overridden by the bound-object
-        # OPS rewrite inside _pattern_scan (a graph can carry both)
-        scan = _pattern_scan(
-            src, pat, const_ids, i, None if routed else triples_ops, p_buckets
-        )
+        scan = _routed_scan(i, pat, card)
         pat_vars = {v for _, v in pat.vars()}
         if result is None:
             result = scan
@@ -830,7 +807,6 @@ def _pattern_scan(
     pat: TriplePattern,
     const_ids: dict[str, int],
     idx: int,
-    triples_ops: DataFrame | None = None,
     p_buckets: int | None = None,
 ) -> DataFrame:
     """One filtered+projected scan of the triples table for one pattern.
@@ -840,23 +816,12 @@ def _pattern_scan(
     positions are projected & renamed to the variable name. A variable
     repeated within the pattern adds an intra-scan equality filter.
     """
-    # bound-object patterns read the o-clustered copy when one exists
-    # (the OPS permutation analogue — reference Index.scala:61-78 row 2/7):
-    # row-group (p,o) min/max stats then prune instead of full-p scans
-    const_pos = {pos for pos, _ in pat.consts()}
-    if (
-        triples_ops is not None
-        and "o" in const_pos
-        and "s" not in const_pos
-    ):
-        df = triples_ops
-    else:
-        df = triples
+    df = triples
     cond: Column | None = None
     for pos, c in pat.consts():
         clause = F.col(pos) == F.lit(const_ids[c])
-        # gate on the CHOSEN scan's columns: a z-ordered OPS twin has
-        # no p_bucket partition column (it prunes via row-group stats)
+        # only the stored layout carries p_bucket; the bucketed-table
+        # copies (triples_s / triples_o) do not
         if pos == "p" and "p_bucket" in df.columns:
             # persisted graphs are partitioned by pmod(p, n_buckets):
             # a bound predicate prunes partitions before any IO. The

@@ -98,7 +98,7 @@ def load_versioned_graph(spark: SparkSession, store_dir: str) -> Graph:
     if m is None:
         raise FileNotFoundError(f"no published snapshot in {store_dir}")
     g = Graph.load(spark, f"{store_dir}/{m['base']}")
-    triples, ops, ddf = g.triples, g.triples_ops, g.dictionary.df
+    triples, ddf = g.triples, g.dictionary.df
     exc = g.dictionary._exceptions
     for entry in m["log"]:
         name = entry["dir"]
@@ -118,15 +118,9 @@ def load_versioned_graph(spark: SparkSession, store_dir: str) -> Graph:
             ):
                 rem = F.broadcast(rem)
             triples = triples.join(rem, ["s", "p", "o"], "left_anti")
-            if ops is not None:
-                ops = ops.join(rem, ["s", "p", "o"], "left_anti")
             continue
         dg = Graph.load(spark, f"{store_dir}/{name}")
         triples = triples.unionByName(dg.triples)
-        if ops is not None and dg.triples_ops is not None:
-            ops = ops.unionByName(dg.triples_ops)
-        else:
-            ops = None
         ddf = ddf.unionByName(dg.dictionary.df)
         if isinstance(exc, list) and isinstance(dg.dictionary._exceptions, list):
             exc = exc + dg.dictionary._exceptions
@@ -135,7 +129,7 @@ def load_versioned_graph(spark: SparkSession, store_dir: str) -> Graph:
     return Graph(
         spark, triples,
         Dictionary(spark, ddf, exceptions=exc if isinstance(exc, list) else None),
-        triples_ops=ops, p_buckets=g.p_buckets,
+        p_buckets=g.p_buckets,
     )
 
 

@@ -91,50 +91,3 @@ def test_zorder_prunes_on_both_columns(spark, grid, tmp_path):
         ).count()
     )
     assert got == want > 0
-
-
-def test_zorder_ops_store_option(spark, tmp_path):
-    """Graph.save(ops_layout='zorder'): the OPS twin clusters on the
-    (p, o) Z-order curve, so ONE copy serves p-bound, o-bound and
-    (p,o)-bound scans via row-group pruning — and the planner still
-    routes o-bound patterns to it and returns identical results."""
-    from graphula_spark.graph import Graph
-    from graphula_spark.plans.bgp import TriplePattern, Var
-
-    rows = [
-        (f"s{i}", f"p{i % 37}", f"o{i % 211}")
-        for i in range(60_000)
-    ]
-    g = Graph.from_string_triples(
-        spark, spark.createDataFrame(rows, ["s", "p", "o"])
-    )
-    store = str(tmp_path / "zstore")
-    g.save(store, ops_layout="zorder", ops_row_group_bytes=64 * 1024)
-    loaded = Graph.load(spark, store)
-    assert "p_bucket" not in loaded.triples_ops.columns
-
-    # o-bound pattern: planner routes to the z-ordered twin; results
-    # must match the in-memory graph exactly
-    pat = [TriplePattern(Var("s"), Var("p"), "o7")]
-    got = {
-        (r["s"], r["p"])
-        for r in loaded.execute_bgp_decoded(pat).collect()
-    }
-    want = {
-        (r["s"], r["p"]) for r in g.execute_bgp_decoded(pat).collect()
-    }
-    assert got == want and len(got) > 0
-
-    # row-group pruning holds on BOTH curve dimensions: point ranges
-    # on o alone and p alone each touch a fraction of the row groups
-    o_id = loaded.dictionary.lookup_terms(["o7"])["o7"]
-    p_id = loaded.dictionary.lookup_terms(["p3"])["p3"]
-    zt_o, ztot = rowgroups_touched(
-        f"{store}/triples_ops", {"o": (o_id - 1, o_id + 1)}
-    )
-    zt_p, _ = rowgroups_touched(
-        f"{store}/triples_ops", {"p": (p_id - 1, p_id + 1)}
-    )
-    assert ztot > 8  # enough row groups for pruning to mean anything
-    assert zt_o / ztot < 0.5
-    assert zt_p / ztot < 0.5

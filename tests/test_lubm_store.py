@@ -1,10 +1,10 @@
 """LUBM golden suite against the *persisted* graph layout.
 
 Re-runs all 14 golden queries through Graph.save/load — exercising the
-predicate-bucket partition pruning and the OPS-copy routing for
-bound-object patterns (most LUBM queries bind o: rdf:type <Class>,
-takesCourse <Course0>, ...) — results must match the committed answers
-exactly, same as the in-memory suite.
+predicate-bucket partition pruning, which bound-object patterns use too
+(most LUBM queries bind o: rdf:type <Class>, takesCourse <Course0>, ...)
+— results must match the committed answers exactly, same as the
+in-memory suite.
 """
 
 import pytest
@@ -22,6 +22,7 @@ from tests.test_lubm_golden import (
 @pytest.fixture(scope="module")
 def lubm_store(spark, tmp_path_factory):
     import glob
+    import os
 
     from graphula_spark.graph import Graph
 
@@ -30,7 +31,7 @@ def lubm_store(spark, tmp_path_factory):
     g = Graph.from_ntriples(spark, paths, cache=False)
     g.save(store)
     g2 = Graph.load(spark, store)
-    assert g2.triples_ops is not None, "OPS copy must exist in the store"
+    assert not os.path.exists(f"{store}/triples_ops"), "the store keeps one triple copy"
     yield g2
 
 

@@ -1,9 +1,11 @@
-"""A saved store: the row order of both on-disk triple copies, the
-planner stats that INSERT DATA / DELETE DATA snapshots of it carry
+"""A saved store: its one on-disk triple copy and its row order, the
+partition pruning of o-bound scans, the planner stats and the
+partition pruning that INSERT DATA / DELETE DATA snapshots of it carry
 (`BgpStats.with_delta`) instead of recomputing over the whole store,
 the shape of the result decode, and the empty store."""
 
 import glob
+import os
 import random
 from collections import Counter
 
@@ -55,15 +57,17 @@ def _rows(path: str, order: tuple[str, ...]) -> list[list[tuple]]:
 
 
 def test_saved_copies_are_sorted_and_hold_the_same_rows(small_store):
+    """The store's one triple copy is (p, s, o)-sorted in every file and
+    holds exactly the base triples; there is no second copy."""
     path, base = small_store
+    assert sorted(os.listdir(path)) == ["_meta.json", "dict", "triples"]
     spo = _rows(f"{path}/triples", ("p", "s", "o"))
-    ops = _rows(f"{path}/triples_ops", ("p", "o", "s"))
-    for rows in spo + ops:
+    for rows in spo:
         assert rows == sorted(rows)
-    spo_set = {(s, p, o) for rows in spo for p, s, o in rows}
-    ops_set = {(s, p, o) for rows in ops for p, o, s in rows}
-    assert len(spo_set) == sum(map(len, spo)) == len(base)
-    assert spo_set == ops_set
+    t = pq.read_table(f"{path}/dict", columns=["id", "value"])
+    term = dict(zip(t.column("id").to_pylist(), t.column("value").to_pylist()))
+    stored = [(term[s], term[p], term[o]) for rows in spo for p, s, o in rows]
+    assert len(stored) == len(base) and set(stored) == base
 
 
 # -- carried stats ------------------------------------------------------
@@ -233,6 +237,73 @@ def test_decode_never_broadcasts_the_dictionary(spark, small_store, query, expec
         if n.getClass().getSimpleName() == "BroadcastExchangeExec"
     ]
     assert not [b for b in broadcasts if _scans_dir(b, dict_dir)]
+
+
+# -- partition pruning --------------------------------------------------
+
+
+def _partition_filters(df, directory: str) -> list[str]:
+    """The partition filters of every file scan of `directory` in the
+    executed plan of `df`."""
+    plan = df._jdf.queryExecution().executedPlan()
+    return [
+        n.partitionFilters().toString()
+        for n in _nodes(plan)
+        if n.getClass().getSimpleName() == "FileSourceScanExec"
+        and _scans_dir(n, directory)
+    ]
+
+
+def _assert_prunes(df, path: str) -> None:
+    filters = _partition_filters(df, f"{path}/triples")
+    assert filters and all("p_bucket" in f for f in filters), filters
+
+
+@pytest.mark.parametrize(
+    "where, prunes",
+    [
+        (f"?s ?p <{EX}C1>", False),
+        (f"?s <{EX}type> <{EX}C1>", True),
+        (f"?s <{EX}knows> <{EX}s9>", True),
+        (f'?s <{EX}rare> "r2"', True),
+        (f"?s <{EX}type> <{EX}C2> . ?s <{EX}name> ?n", True),
+    ],
+    ids=["o", "type-o", "knows-o", "rare-o", "po-star"],
+)
+def test_o_bound_scans_match_memory_and_prune(spark, small_store, where, prunes):
+    """o-bound and (p, o)-bound patterns on the loaded store return the
+    in-memory graph's rows; a bound predicate keeps its p_bucket
+    partition filter."""
+    path, base = small_store
+    query = f"SELECT * WHERE {{ {where} }}"
+    mem = Graph.from_string_triples(
+        spark, spark.createDataFrame(sorted(base), "s string, p string, o string")
+    )
+    want = sorted(map(tuple, mem.sparql(query).collect()))
+    df = Graph.load(spark, path).sparql(query)
+    assert sorted(map(tuple, df.collect())) == want and want
+    if prunes:
+        _assert_prunes(df, path)
+
+
+def test_update_snapshots_keep_partition_pruning(spark, tmp_path):
+    """After an INSERT DATA and a DELETE DATA on a store saved with 7
+    buckets, a bound-predicate scan still reads only its predicate's
+    partition, with the store's modulus, and sees both updates."""
+    base = _base_triples()
+    path = str(tmp_path / "store7")
+    df = spark.createDataFrame(sorted(base), "s string, p string, o string")
+    Graph.from_string_triples(spark, df).save(path, p_buckets=7)
+    g = Graph.load(spark, path)
+    added = [(f"{EX}s{i}", f"{EX}name", f'"m{i}"') for i in (1, 70, 71)]
+    removed = [(f"{EX}s{i}", f"{EX}name", f'"n{i}"') for i in (2, 3)] + [added[1]]
+    g = g.sparql_update(f"INSERT DATA {{ {' . '.join(map(_nt, added))} }}")
+    g = g.sparql_update(f"DELETE DATA {{ {' . '.join(map(_nt, removed))} }}")
+    current = (base | set(added)) - set(removed)
+    want = sorted((s, o) for s, p, o in current if p == f"{EX}name")
+    q = g.sparql(f"SELECT ?s ?o WHERE {{ ?s <{EX}name> ?o }}")
+    assert sorted(map(tuple, q.collect())) == want
+    _assert_prunes(q, path)
 
 
 # -- empty store --------------------------------------------------------
