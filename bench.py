@@ -1,7 +1,12 @@
 #!/usr/bin/env python
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) and prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+  {"metric": "...", "value": N, "unit": "sec", "sf": ..., "errors": [...],
+   "skipped": [...], "queries": {...}}
+
+"errors" names each section that raised and each LUBM query whose row
+count differs from its golden cardinality; "skipped" names each
+section whose data is absent ("lubm" without the reference data).
 
 Graph construction is reported as TWO always-comparable metrics:
 "graph_build_s" (triple-ization + dictionary build + store write,
@@ -267,6 +272,11 @@ def main() -> None:
     print(f"# floor: {floor_s*1000:.0f}ms per no-op job", file=sys.stderr)
 
     per_query: dict[str, float] = {}
+    # what failed (a section's exception, a golden-cardinality
+    # mismatch) and what could not run (absent data) — both ride in
+    # the compact line, so a failure never shows only on stderr
+    errors: list[str] = []
+    skipped: list[str] = []
     total = 0.0
     for name in HEADLINE:
         fn = queries[name]
@@ -307,6 +317,7 @@ def main() -> None:
         pq_codes.unpersist()
     except Exception as e:  # pragma: no cover - defensive
         print(f"# ann_pq_topk failed: {e}", file=sys.stderr)
+        errors.append("ann_pq_topk")
 
     # Dataset.reduce_rdfs probe (VERDICT r9 #6): multi-graph
     # inference-aware compression over the events fact — the ×10
@@ -357,6 +368,7 @@ def main() -> None:
             total += dt
     except Exception as e:  # pragma: no cover - defensive
         print(f"# bucketed tpch A/B failed: {e}", file=sys.stderr)
+        errors.append("bucketed")
     finally:
         tpch.BUCKETED.pop(sf_dir, None)
 
@@ -399,9 +411,12 @@ def main() -> None:
                     f"got {rows} **",
                     file=sys.stderr,
                 )
+                errors.append(name)
         g.triples.unpersist()
         g.dictionary.df.unpersist()
         spark.conf.set("spark.sql.adaptive.enabled", "true")
+    else:
+        skipped.append("lubm")
     # ~sf1 scale probe (×10 replication of sf0.1, facts key-shifted,
     # dims fixed): tracks wall-clock ratios round-over-round instead of
     # in ROADMAP prose. Cached in /tmp across runs; SPARK_GRAFT_SF1=0
@@ -413,6 +428,7 @@ def main() -> None:
             sf1_section = run_sf1_probe(spark, sf_dir, queries, warmup)
         except Exception as e:  # pragma: no cover - defensive
             print(f"# sf1 probe failed: {e}", file=sys.stderr)
+            errors.append("sf1")
 
     full = {
         "metric": "headline_queries_total",
@@ -426,13 +442,16 @@ def main() -> None:
         "floor_s": round(floor_s, 3),
         "store_bytes": store_sizes(sf_dir),
         "sf1": sf1_section,
+        "errors": errors,
+        "skipped": skipped,
     }
     # The driver archives only the LAST 2000 stdout chars; rounds 4-12
     # lost every alphabetically-early query key to that window because
     # this line carried sections/store_bytes/sf1 inline (VERDICT r12
     # "What's missing" #1). Full record -> BENCH_local.json + stderr;
-    # stdout gets one compact line (metric/value/unit/sf/floor/queries)
-    # with a hard length guard so the archive parses again.
+    # stdout gets one compact line (metric/value/unit/sf/floor/errors/
+    # skipped/queries) with a hard length guard so the archive parses
+    # again.
     side = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_local.json"
     )
@@ -449,6 +468,8 @@ def main() -> None:
         "unit": "sec",
         "sf": sf,
         "floor_s": round(floor_s, 3),
+        "errors": errors,
+        "skipped": skipped,
         "queries": per_query,
     }
     line = json.dumps(compact, separators=(",", ":"))
@@ -570,8 +591,9 @@ SF1_QUERIES = [
     # rather than replicates, so the x10 run would measure identical
     # data. The DATA-PROPORTIONAL inference row is rdfs_derive_events
     # (events fact, key-shifted x10 -> x10 derived rows); the byte-level
-    # scale evidence is tools/probe_r8.py (10 MB vs 359 MB shuffled at
-    # 20M triples) and tools/probe_r9.py (OWL delta: 3 MB vs 2.5 GB).
+    # scale evidence is 10 MB vs 359 MB shuffled at 20M triples
+    # (`git show efe3c4f:tools/probe_r8.py`) and, for the OWL delta,
+    # 3 MB vs 2.5 GB (`git show efe3c4f:tools/probe_r9.py`).
     "rdfs_derive_events",
 ]
 

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphula_spark import batch as batch_mod
 from graphula_spark.dictionary import Dictionary
 from graphula_spark.graph import Graph
 from graphula_spark.sources.ntriples import read_nquads
@@ -245,48 +246,19 @@ class Dataset:
             )
         )
         gid = d2.lookup_terms([target])[target]
-        # derived is already distinct (the closure dedups; the anti-join
-        # keeps it so) and can only collide with quads already IN the
-        # target graph (any other graph differs on g). Dedup against
-        # that filter-pruned slice, then plain union: re-materialization
-        # never shuffles the existing 100 TB quad table — the old
-        # global dropDuplicates(["s","p","o","g"]) did exactly that
-        # (VERDICT r5 What's-wrong #1). Join ORDER matters for the
-        # remaining shuffle: a direct `derived ANTI existing` can never
-        # broadcast (Spark only broadcasts the RIGHT side of LEFT ANTI,
-        # and `existing` is the big side), so it would shuffle the
-        # whole target slice even for a tiny derived set. Instead,
-        # semi-join the overlap out of `existing` (streams the slice
-        # past a broadcast of `derived` when AQE sees it is small),
-        # then anti-join derived against that derived-bounded overlap —
-        # zero target-slice shuffle in the common small-derivation
-        # case, and the same shuffle join as before when derived is
-        # genuinely large (probe: tools/probe_r6.py, 20M quads / 50k
-        # derived: 1 MB shuffled vs 312 MB for the global dedup).
+        # derived is already distinct (the closure dedups) and can only
+        # collide with quads already IN the target graph (any other
+        # graph differs on g): subtract that filter-pruned slice, then
+        # plain union — the existing quad table is never shuffled (a
+        # global dropDuplicates over quads ∪ derived shuffled 312 MB
+        # at 20M quads for 50k derived rows against 1 MB this way,
+        # `git show efe3c4f:tools/probe_r6.py`)
         existing_target = self.quads.where(F.col("g") == F.lit(gid)).select(
             "s", "p", "o"
         )
-        if (
-            n_derived_max is not None
-            and n_derived_max <= rdfs_mod.BROADCAST_DERIVED_MAX_ROWS
-        ):
-            # derived is persisted + known-small (rdfs._derive_only
-            # counted it): hint the broadcasts explicitly — Catalyst's
-            # static estimate for the derived side inherits corpus-scan
-            # stats and would otherwise plan SortMergeJoin, shuffling
-            # the target slice's map side before AQE can intervene
-            # (tools/probe_r8.py)
-            present = existing_target.join(
-                F.broadcast(derived), ["s", "p", "o"], "left_semi"
-            )
-            fresh = derived.join(
-                F.broadcast(present), ["s", "p", "o"], "left_anti"
-            )
-        else:
-            present = existing_target.join(
-                derived, ["s", "p", "o"], "left_semi"
-            )
-            fresh = derived.join(present, ["s", "p", "o"], "left_anti")
+        fresh = batch_mod.minus_stored(
+            derived, n_derived_max, existing_target, ["s", "p", "o"]
+        )
         new_quads = self.quads.unionByName(
             fresh.withColumn("g", F.lit(gid).cast("long")).select(
                 "s", "p", "o", "g"
@@ -502,7 +474,7 @@ class Dataset:
             # an unknown ontology name (onto_gid None) is an EMPTY
             # graph — never the g-IS-NULL default-graph bucket
             n_onto = slice_counts.get(onto_gid, 0) if onto_visible else 0
-            onto_small = n_onto <= rdfs_mod.BROADCAST_DERIVED_MAX_ROWS
+            onto_small = n_onto <= batch_mod.BATCH_BROADCAST_MAX_ROWS
 
         # ONE quads-wide schema collect (round 15): the per-graph
         # reduce_graph_removals schema jobs all scan the same
@@ -668,13 +640,11 @@ class Dataset:
         dictionary (hash-encode — a pure map), the never-asserted
         remainder appends.
 
-        100 TB shape (round 8): set semantics used to come from a
-        global dropDuplicates over quads ∪ batch — a full quad-table
-        shuffle per insert. Same counted two-step as
-        `Graph.add_string_triples` (tools/probe_r8.py), with the
-        overlap joins NULL-SAFE on g (default-graph rows carry a null
-        graph id, and a plain equi-join would never match them — the
-        insert would silently duplicate default-graph quads)."""
+        Set semantics at batch size as in `Graph.add_string_triples`
+        (`batch.minus_stored`), with the overlap joins NULL-SAFE on g
+        (default-graph rows carry a null graph id, and a plain equi-join
+        would never match them — the insert would silently duplicate
+        default-graph quads)."""
         from pyspark import StorageLevel
 
         terms = squads.select(
@@ -698,7 +668,6 @@ class Dataset:
             .dropDuplicates(["s", "p", "o", "g"])
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        n_new = new.count()
 
         def cond(left, right):
             return (
@@ -709,13 +678,7 @@ class Dataset:
             )
 
         q = self.quads.select("s", "p", "o", "g")
-        if n_new <= Graph.INSERT_BROADCAST_MAX_ROWS:
-            present = q.join(F.broadcast(new), cond(q, new), "left_semi")
-            fresh = new.join(
-                F.broadcast(present), cond(new, present), "left_anti"
-            )
-        else:
-            fresh = new.join(q, cond(new, q), "left_anti")
+        fresh = batch_mod.minus_stored(new, new.count(), q, cond)
         return Dataset(self.spark, q.unionByName(fresh), d2)
 
     def delete_quads_materialized(
@@ -894,7 +857,7 @@ class Dataset:
         ).localCheckpoint(eager=True)
         over_b = (
             F.broadcast(over_sel)
-            if over_sel.count() <= rdfs_mod.BROADCAST_DERIVED_MAX_ROWS
+            if over_sel.count() <= batch_mod.BATCH_BROADCAST_MAX_ROWS
             else over_sel
         )
         quads = ds2.quads.join(
@@ -920,11 +883,10 @@ class Dataset:
         null-safe anti-join; dictionary entries are retained (ids are
         content hashes — orphans are harmless, decode stays stable).
 
-        The delete set is the RIGHT side of the LEFT ANTI — the
-        broadcastable side — but the hint is gated on a count (round
-        8): an unconditional broadcast of a user-provided batch OOMs
-        when someone deletes a corpus-sized slice; above the gate the
-        null-safe equi-join sort-merges, the correct plan there."""
+        The delete set is the right side of the LEFT ANTI. It is
+        persisted and counted, so the planner has its exact cached size
+        and broadcasts it when it fits; a corpus-sized delete set
+        sort-merges."""
         from pyspark import StorageLevel
 
         enc = squads
@@ -946,14 +908,10 @@ class Dataset:
             & (F.col("o") == F.col("do"))
             & F.col("g").eqNullSafe(F.col("dg"))
         )
-        right = (
-            F.broadcast(d)
-            if d.count() <= Graph.INSERT_BROADCAST_MAX_ROWS
-            else d
-        )
+        d.count()  # materialized: the planner reads its exact size
         return Dataset(
             self.spark,
-            self.quads.join(right, cond, "left_anti"),
+            self.quads.join(d, cond, "left_anti"),
             self.dictionary,
         )
 

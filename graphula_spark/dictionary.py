@@ -38,6 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 from pyspark.sql.window import Window
 
+from graphula_spark import batch as batch_mod
+
 #: Long.MaxValue mask — keeps ids positive (reference: Dictionary.scala:36)
 HASH_MASK = (1 << 63) - 1
 
@@ -94,15 +96,6 @@ class Dictionary:
     #: shuffle-hash join against `df`
     BUCKETED_DECODE_MIN_ROWS = 5_000_000
 
-    #: incremental-union batches below this row count get explicit
-    #: broadcast hints in the against-the-dictionary joins (novelty
-    #: anti-join + id-clash probe): Catalyst cannot size the batch
-    #: statically, so without the hint those joins plan SortMergeJoin
-    #: and RESHUFFLE THE WHOLE DICTIONARY to add a handful of terms —
-    #: probed at a 20M-term dictionary: 102 MB shuffled to register
-    #: ONE term (tools/probe_r8.py).
-    BROADCAST_NEW_TERMS_MAX_ROWS = 500_000
-
     def _bucketed_decode(self) -> bool:
         """Whether decode joins take the id-bucketed branch: the layout
         exists and the dictionary has BUCKETED_DECODE_MIN_ROWS rows."""
@@ -123,7 +116,6 @@ class Dictionary:
         terms: DataFrame,
         existing: DataFrame | None,
         max_rounds: int = 12,
-        n_terms: int | None = None,
     ) -> tuple[DataFrame, bool]:
         """Assign a unique id to every term in `terms` (one 'value'
         column, distinct, non-null), disjoint from `existing` ids.
@@ -142,12 +134,10 @@ class Dictionary:
         every id is the raw term hash, so the caller can record an
         empty collision-exception list without any extra scan.
 
-        ``n_terms`` (when the caller already counted the batch) gates
-        the id-clash probe's join order: a known-small batch is
-        BROADCAST against the streaming existing-id scan, so an
-        incremental union never shuffles the existing dictionary
-        (tools/probe_r8.py: the old shape shuffled 102 MB of ids to
-        register one term at 20M entries).
+        The id-clash probe streams the existing ids past the batch's
+        ids: the batch is persisted (its source counted), so the
+        planner sizes it and broadcasts it when it fits, and an
+        incremental union does not shuffle the existing dictionary.
         """
         from pyspark import StorageLevel
 
@@ -168,10 +158,6 @@ class Dictionary:
         # function guarantees it) — the old .distinct() here reshuffled
         # the whole dictionary on every incremental union for nothing
         ex_ids = existing.select("id") if existing is not None else None
-        small = (
-            n_terms is not None
-            and n_terms <= Dictionary.BROADCAST_NEW_TERMS_MAX_ROWS
-        )
         for rnd in range(max_rounds):
             dup_ids = (
                 result.groupBy("id")
@@ -181,19 +167,8 @@ class Dictionary:
             )
             bad_ids = dup_ids
             if ex_ids is not None:
-                if small:
-                    # stream the dictionary past a broadcast of the
-                    # batch's ids — zero dictionary shuffle; output ids
-                    # are unique (they come from ex_ids)
-                    clash_ids = ex_ids.join(
-                        F.broadcast(result.select("id")), "id", "left_semi"
-                    )
-                else:
-                    clash_ids = (
-                        result.join(ex_ids, "id", "left_semi")
-                        .select("id")
-                        .distinct()
-                    )
+                # output ids are unique: they come from ex_ids
+                clash_ids = ex_ids.join(result.select("id"), "id", "left_semi")
                 bad_ids = dup_ids.unionByName(clash_ids).distinct()
             if bad_ids.isEmpty():
                 return result.select("id", "value"), rnd == 0
@@ -257,23 +232,17 @@ class Dictionary:
         assigned, clean = cls._assign_ids(distinct, None)
         return cls(spark, assigned, exceptions=[] if clean else None)
 
-    def union(self, other_terms: DataFrame) -> "Dictionary":
-        """Extend with new terms (incremental load); existing ids stable.
+    def new_terms(self, other_terms: DataFrame) -> tuple[DataFrame, bool]:
+        """The (id, value) entries for the terms of `other_terms` (first
+        column) that this dictionary lacks, and whether every one of
+        them kept its raw term hash as its id (see `_assign_ids`).
 
         Fresh ids are assigned with the same iterated ranked-salt scheme
         as build, with the existing id set excluded — post-salt
-        uniqueness is guaranteed by the fixed point, not assumed.
-
-        100 TB shape: the batch is counted once (persisted, so the
-        count is the materialization the joins reuse), and a
-        known-small batch runs both against-the-dictionary joins with
-        the DICTIONARY STREAMING — novelty via semi-join the overlap
-        out of the dictionary (batch broadcast) then anti-join the
-        batch against that batch-bounded overlap; a direct
-        `batch ANTI dict` can never broadcast (only the right side of
-        LEFT ANTI broadcasts, and that is the dictionary) and
-        reshuffled all 20M entries to add one term (tools/probe_r8.py).
-        """
+        uniqueness is guaranteed by the fixed point, not assumed. The
+        batch is deduped, persisted and counted, and
+        `batch.minus_stored` finds its unseen terms with the dictionary
+        streaming."""
         from pyspark import StorageLevel
 
         from graphula_spark.scratch import track
@@ -284,15 +253,13 @@ class Dictionary:
             .distinct()
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        n_new = cand.count()
-        if n_new <= Dictionary.BROADCAST_NEW_TERMS_MAX_ROWS:
-            present = self.df.join(F.broadcast(cand), "value", "left_semi")
-            new_terms = cand.join(F.broadcast(present), "value", "left_anti")
-        else:
-            new_terms = cand.join(self.df, "value", "left_anti")
-        fresh, clean = Dictionary._assign_ids(
-            new_terms, self.df, n_terms=n_new
-        )
+        unseen = batch_mod.minus_stored(cand, cand.count(), self.df, ["value"])
+        return Dictionary._assign_ids(unseen, self.df)
+
+    def union(self, other_terms: DataFrame) -> "Dictionary":
+        """Extend with new terms (incremental load); existing ids stable
+        (`new_terms`)."""
+        fresh, clean = self.new_terms(other_terms)
         exc = None
         if clean and isinstance(self._exceptions, list):
             exc = list(self._exceptions)

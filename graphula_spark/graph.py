@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from graphula_spark import batch as batch_mod
 from graphula_spark.dictionary import Dictionary
 from graphula_spark.plans.bgp import BgpStats, TriplePattern, Var, execute_bgp
 from graphula_spark.sources.ntriples import read_ntriples
@@ -123,11 +124,6 @@ class Graph:
     ) -> "Graph":
         return cls.from_string_triples(spark, read_ntriples(spark, paths), cache=cache)
 
-    #: counted-broadcast gate for insert batches, same sizing story as
-    #: rdfs.BROADCAST_DERIVED_MAX_ROWS (3-long rows ≈ 48 MB hashed at
-    #: 1M — inside the session's 64 MB broadcast budget)
-    INSERT_BROADCAST_MAX_ROWS = 1_000_000
-
     def add_string_triples(self, striples: DataFrame) -> "Graph":
         """Incremental insert (reference: performAdd, Sparql.scala:115-127).
 
@@ -135,18 +131,10 @@ class Graph:
         never-asserted remainder. Returns a new immutable Graph
         (snapshot semantics replace LMDB transactions, SURVEY §1.6/§1.7).
 
-        100 TB shape (round 8): set semantics used to come from a
-        GLOBAL dropDuplicates over corpus ∪ batch — a full corpus
-        shuffle to insert a handful of triples. The batch is now
-        deduped at batch size, counted (the persist makes the count
-        the materialization the joins reuse), and a known-small batch
-        removes its already-asserted overlap with the corpus
-        STREAMING: semi-join the overlap out of the corpus past a
-        broadcast of the batch, anti-join the batch against that
-        batch-bounded overlap, append with a narrow union — the same
-        gated two-step as rdfs._derive_only / Dictionary.union
-        (tools/probe_r8.py). Large batches fall back to the shuffle
-        anti-join, the correct plan when batch ≈ corpus.
+        Set semantics at batch size: the batch is deduped, persisted
+        and counted, its stored rows are removed by
+        `batch.minus_stored` (the corpus only streams), and the rest is
+        appended with a narrow union.
 
         A graph with complete planner stats (a loaded store, or an
         earlier update of one) hands the snapshot its stats plus the
@@ -174,17 +162,12 @@ class Graph:
             .dropDuplicates(["s", "p", "o"])
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        n_new = new_triples.count()
-        spo = self.triples.select("s", "p", "o")
-        if n_new <= Graph.INSERT_BROADCAST_MAX_ROWS:
-            present = spo.join(
-                F.broadcast(new_triples), ["s", "p", "o"], "left_semi"
-            )
-            fresh = new_triples.join(
-                F.broadcast(present), ["s", "p", "o"], "left_anti"
-            )
-        else:
-            fresh = new_triples.join(spo, ["s", "p", "o"], "left_anti")
+        fresh = batch_mod.minus_stored(
+            new_triples,
+            new_triples.count(),
+            self.triples.select("s", "p", "o"),
+            ["s", "p", "o"],
+        )
         stats = None
         if self._carries_stats():
             # carry the planner stats: materialize the batch-sized
@@ -306,8 +289,11 @@ class Graph:
                 return g2  # no schema loaded — nothing derivable
         return Graph(
             self.spark,
-            g2.triples.select("s", "p", "o").unionByName(fresh),
+            g2.triples.select(*g2._layout_cols()).unionByName(
+                g2._with_p_bucket(fresh)
+            ),
             d,
+            p_buckets=self.p_buckets,
         )
 
     def delete_materialized_rdfs(
@@ -348,8 +334,11 @@ class Graph:
             return g2
         return Graph(
             self.spark,
-            g2.triples.select("s", "p", "o").unionByName(kept),
+            g2.triples.select(*g2._layout_cols()).unionByName(
+                g2._with_p_bucket(kept)
+            ),
             self.dictionary,
+            p_buckets=self.p_buckets,
         )
 
     def delete_string_triples(self, striples: DataFrame) -> "Graph":
@@ -359,15 +348,9 @@ class Graph:
         content-hashes, so orphaned entries are harmless and keep
         decode stable for concurrent readers).
 
-        100 TB shape (round 9, mirroring the r8 quad-level fix): the
-        delete set is the RIGHT side of the LEFT ANTI — broadcastable —
-        but Catalyst cannot SIZE a user-provided batch statically, so
-        the un-hinted join planned as SortMergeJoin and shuffled the
-        whole corpus to delete a handful of rows. The batch is deduped,
-        persisted and counted once; below the insert gate it carries an
-        explicit broadcast hint (corpus streams, zero corpus shuffle).
-        Above the gate the shuffle join stands — the correct plan when
-        deleting a corpus-sized slice.
+        The delete set is the right side of the LEFT ANTI. It is
+        deduped, persisted and counted, so the planner has its exact
+        cached size and broadcasts it when it fits (the corpus streams).
 
         Planner stats carry over as in `add_string_triples`: one
         corpus-streaming pass counts the stored victims per predicate."""
@@ -387,12 +370,7 @@ class Graph:
             .dropDuplicates(["s", "p", "o"])
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        n_victims = victims.count()
-        right = (
-            F.broadcast(victims)
-            if n_victims <= Graph.INSERT_BROADCAST_MAX_ROWS
-            else victims
-        )
+        victims.count()  # materialized: the planner reads its exact size
         stats = None
         if self._carries_stats():
             # carry the planner stats: one corpus-streaming pass counts
@@ -400,7 +378,7 @@ class Graph:
             removed = {
                 r["p"]: r["cnt"]
                 for r in self.triples.select("s", "p", "o")
-                .join(right, ["s", "p", "o"], "left_semi")
+                .join(victims, ["s", "p", "o"], "left_semi")
                 .groupBy("p")
                 .agg(F.count(F.lit(1)).alias("cnt"))
                 .collect()
@@ -409,7 +387,7 @@ class Graph:
         return Graph(
             self.spark,
             self.triples.select(*self._layout_cols()).join(
-                right, ["s", "p", "o"], "left_anti"
+                victims, ["s", "p", "o"], "left_anti"
             ),
             self.dictionary,
             stats=stats,
@@ -478,10 +456,10 @@ class Graph:
 
             def write_dict() -> None:
                 # dictionary partitioned by an id-hash bucket: decode
-                # joins on a loaded store include the partition column,
-                # so dynamic partition pruning reads only the buckets a
-                # result's ids hit — the decode path for dictionaries
-                # too big to broadcast (100 TB design)
+                # joins on a loaded store past BUCKETED_DECODE_MIN_ROWS
+                # include the partition column, so dynamic partition
+                # pruning reads only the buckets a result's ids hit
+                # instead of shuffling the whole dictionary
                 (
                     dict_df.withColumn(
                         "id_bucket",

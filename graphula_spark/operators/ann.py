@@ -1024,7 +1024,8 @@ def _subdivide_hot_cells(
     the raw KMeans centroid instead leaves a constant offset that
     dominates every projection when the cluster's raw magnitude isn't
     1, collapsing the split to however many planes happen to cross it
-    (caught by tools/probe_r13.py with a non-unit template). Means come
+    (caught with a non-unit template, `git show
+    efe3c4f:tools/probe_r13.py`). Means come
     from ONE posexplode + (cell, pos) avg rebuilt in position order —
     a constant number of Catalyst expressions at ANY embedding width
     (the previous shape emitted one avg column per dimension, which at
@@ -1049,8 +1050,8 @@ def _subdivide_hot_cells(
     passes the eps filter, so the fragmented group reconnects and
     GROUP recall stays ~1.0; for a mixed oversized cell, cross-bucket
     pairs whose components share no eps-similar representatives are
-    lost — the measured probe gates recall ≥ 0.9 (tools/probe_r13.py,
-    PLANS.md §36)."""
+    lost — the measured probe gates recall ≥ 0.9 (PLANS.md §36;
+    `git show efe3c4f:tools/probe_r13.py`)."""
     import numpy as np
 
     first = v.select("nv").first()
@@ -1387,7 +1388,8 @@ def semantic_decontaminate(
     trades candidate volume against borderline recall: UNRELATED pairs
     collide at ~num_bands/2^planes (the term that must stay tiny — at
     1M x 200k even a 1% pair rate is 2 billion scorings; the 16-plane
-    default keeps it at 0.012%, probe_r11 D), while a pair at cosine c
+    default keeps it at 0.012%, section D of
+    `git show efe3c4f:tools/probe_r11.py`), while a pair at cosine c
     matches a band at (1 - acos(c)/pi)^planes — ~0.66/band at c=0.997
     (true dups), ~0.19 at exactly c=0.95, so recall is ~1.0 for
     real duplicates and degrades toward the threshold boundary
@@ -1470,7 +1472,8 @@ def _semantic_decontaminate_bucketed(
     an Arrow-batched Pandas UDF doing ONE numpy matmul per batch —
     128 hyperplane dot products per row as Catalyst HOF expressions
     blew up whole-stage codegen and ran minutes at 1M rows
-    (probe_r11 D caught it); the matmul is milliseconds per batch."""
+    (caught by section D of `git show efe3c4f:tools/probe_r11.py`); the
+    matmul is milliseconds per batch."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graphula_spark import batch as batch_mod
+
 # IRIs are stored BRACKET-LESS (sources/ntriples.py norm; the SPARQL
 # compiler strips <> when resolving constants)
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -46,20 +48,6 @@ RDFS_RANGE = "http://www.w3.org/2000/01/rdf-schema#range"
 #: refuse driver-side closure above this many schema edges — an
 #: "ontology" this big is data mislabeled as schema
 MAX_SCHEMA_EDGES = 1_000_000
-
-#: explicit-broadcast gate for the derived set in the corpus overlap
-#: joins. Catalyst cannot SIZE the derived side statically (its
-#: estimate inherits the corpus scan's stats through the rule joins),
-#: so without the hint the semi-join plans as SortMergeJoin and the
-#: corpus map-side shuffle WRITE happens before AQE's runtime
-#: broadcast conversion can skip anything — probed at 20M triples /
-#: 0.8M derived: 348 MB corpus shuffle (tools/probe_r8.py, the round-8
-#: finding). Below this row count we KNOW (post-count, rows × ~48 B
-#: per 3-long HashedRelation row ≈ 48 MB) the derived set fits the
-#: session's 64 MB broadcast budget, so the hint is safe; above it the
-#: shuffle join is the correct plan — derived ≈ corpus there, and
-#: O(derived) and O(corpus) coincide.
-BROADCAST_DERIVED_MAX_ROWS = 1_000_000
 
 
 def _bounded_collect(df: DataFrame, what: str) -> list:
@@ -311,28 +299,15 @@ def _derive_only(graph, data: DataFrame | None = None, corpus: DataFrame | None 
         the branch unions otherwise fan the map side out to
         branches × input partitions of mostly-tiny tasks; coalesce
         merges narrow deps, no extra shuffle);
-      * asserted triples are removed with the same broadcast-friendly
-        two-step as Dataset's landing: semi-join the re-derivable
-        overlap OUT OF the corpus (the derived set is the RIGHT side
-        of the LEFT SEMI — the corpus only streams), then anti-join
-        the derived set against that derived-bounded overlap. A direct
-        `derived ANTI corpus` could never broadcast (only the right
-        side of LEFT ANTI broadcasts, and there the corpus is the
-        right side) and would shuffle the whole graph;
-      * the deduped derived set is PERSISTED and COUNTED, and below
-        BROADCAST_DERIVED_MAX_ROWS the semi/anti pair carries EXPLICIT
-        broadcast hints — Catalyst's static size estimate for the
-        derived side inherits the corpus scan's stats, so without the
-        hint the semi-join plans as SortMergeJoin and the corpus
-        map-side shuffle write lands before AQE can convert anything
-        (tools/probe_r8.py: 348 MB corpus shuffle for a 0.8M-row
-        derivation at 20M triples — the r8 finding). The persist also
-        stops the rule joins recomputing for every consumer (the
-        semi probe, the anti, and each caller's landing joins).
+      * the deduped derived set is PERSISTED and COUNTED, and its
+        asserted triples are removed by `batch.minus_stored` (the
+        corpus only streams). The persist also stops the rule joins
+        recomputing for every consumer (the semi probe, the anti, and
+        each caller's landing joins).
 
     Returns (fresh, d, n_max) where n_max bounds fresh's row count
     (the deduped derived count BEFORE removing asserted overlap) so
-    callers can reuse the same broadcast gate for their own landing
+    callers can hand it to `batch.minus_stored` for their own landing
     joins without another count job. (None, d, 0) when no schema is
     loaded.
 
@@ -369,24 +344,13 @@ def _derive_only(graph, data: DataFrame | None = None, corpus: DataFrame | None 
         if corpus is None
         else corpus.select("s", "p", "o")
     )
-    if n_u <= BROADCAST_DERIVED_MAX_ROWS:
-        overlap = triples.join(F.broadcast(u), ["s", "p", "o"], "left_semi")
-        # left-semi preserves LEFT multiplicity, and Dataset callers
-        # pass an un-deduped data∪ontology union as the corpus — the
-        # overlap can be a small multiple of n_u, so dedup it back to
-        # its n_u bound BEFORE forcing the broadcast (the 48 MB budget
-        # argument assumes distinct rows; judge ADVICE r8). The dedup
-        # shuffles only the overlap itself (≤ dup·n_u rows). When the
-        # corpus IS the graph's own triples, set semantics (O3) make
-        # the overlap distinct already — skip the extra exchange, it
-        # was a measurable slice of materialize's fixed cost at toy
-        # scale (VERDICT r9 #2).
-        if corpus is not None:
-            overlap = overlap.dropDuplicates(["s", "p", "o"])
-        fresh = u.join(F.broadcast(overlap), ["s", "p", "o"], "left_anti")
-    else:
-        overlap = triples.join(u, ["s", "p", "o"], "left_semi")
-        fresh = u.join(overlap, ["s", "p", "o"], "left_anti")
+    # Dataset callers pass an un-deduped data∪ontology union as the
+    # corpus, so its overlap is deduped; the graph's own triples are
+    # distinct (O3), and the extra exchange was a measurable slice of
+    # materialize's fixed cost at toy scale (VERDICT r9 #2)
+    fresh = batch_mod.minus_stored(
+        u, n_u, triples, ["s", "p", "o"], dedup_overlap=corpus is not None
+    )
     # persist fresh too: callers consume it repeatedly (materialize's
     # union + count, Dataset's landing semi + anti + union), and every
     # un-cached consumption would re-stream the corpus to rebuild the
@@ -806,7 +770,7 @@ def derive_owl_delta(graph, batch: DataFrame, max_rounds: int = 8):
                     if n_delta == 0:
                         delta_e.unpersist()
                         continue
-                    small = n_delta <= BROADCAST_DERIVED_MAX_ROWS
+                    small = n_delta <= batch_mod.BATCH_BROADCAST_MAX_ROWS
                     # G_p must be the CLOSED relation the T-decomposition
                     # collapses corpus hops with. Round 0: the asserted
                     # relation minus the batch edges — the batch typically
@@ -838,20 +802,12 @@ def derive_owl_delta(graph, batch: DataFrame, max_rounds: int = 8):
                     else:
                         g_p = g_p_all
                     # edges already in the closed relation derive nothing
-                    # (G_p ∘ G_p ⊆ G_p): drop them with the broadcast-
-                    # friendly semi/anti two-step so re-ingested data costs
-                    # ~nothing
-                    if small:
-                        overlap = g_p.join(
-                            F.broadcast(delta_e), ["src", "dst"], "left_semi"
-                        ).dropDuplicates(["src", "dst"])
-                        delta_new = delta_e.join(
-                            F.broadcast(overlap), ["src", "dst"], "left_anti"
-                        )
-                    else:
-                        delta_new = delta_e.join(
-                            g_p, ["src", "dst"], "left_anti"
-                        )
+                    # (G_p ∘ G_p ⊆ G_p): drop them with the corpus
+                    # streaming, so re-ingested data costs ~nothing
+                    delta_new = batch_mod.minus_stored(
+                        delta_e, n_delta, g_p, ["src", "dst"],
+                        dedup_overlap=True,
+                    )
                     dd = F.broadcast(delta_new) if small else delta_new
                     # T = (I ∪ G_p) ∘ Δ ∘ (I ∪ G_p): both joins Δ-keyed —
                     # the corpus relation streams past a broadcast of Δ
@@ -868,7 +824,7 @@ def derive_owl_delta(graph, batch: DataFrame, max_rounds: int = 8):
                     n_left = left.count()
                     ld = (
                         F.broadcast(left)
-                        if n_left <= BROADCAST_DERIVED_MAX_ROWS
+                        if n_left <= batch_mod.BATCH_BROADCAST_MAX_ROWS
                         else left
                     )
                     post = ld.alias("l").join(
@@ -886,7 +842,7 @@ def derive_owl_delta(graph, batch: DataFrame, max_rounds: int = 8):
                     )
 
             # fresh_rdfs is already corpus-subtracted (by _derive_only);
-            # the OWL frames need the same dedup + semi/anti two-step
+            # the OWL frames need the same dedup + subtraction
             round_new = fresh_rdfs
             if derived:
                 u = derived[0]
@@ -899,17 +855,10 @@ def derive_owl_delta(graph, batch: DataFrame, max_rounds: int = 8):
                 )
                 n_u = u.count()
                 if n_u > 0:
-                    if n_u <= BROADCAST_DERIVED_MAX_ROWS:
-                        ov = cur_corpus.join(
-                            F.broadcast(u), ["s", "p", "o"], "left_semi"
-                        ).dropDuplicates(["s", "p", "o"])
-                        owl_fresh = u.join(
-                            F.broadcast(ov), ["s", "p", "o"], "left_anti"
-                        )
-                    else:
-                        owl_fresh = u.join(
-                            cur_corpus, ["s", "p", "o"], "left_anti"
-                        )
+                    owl_fresh = batch_mod.minus_stored(
+                        u, n_u, cur_corpus, ["s", "p", "o"],
+                        dedup_overlap=True,
+                    )
                     round_new = round_new.unionByName(owl_fresh)
 
             frontier = round_new.dropDuplicates(["s", "p", "o"]).localCheckpoint(
@@ -986,7 +935,7 @@ def derive_rdfs_delete(
     n_v = v.count()
     if n_v == 0:
         return empty
-    small = n_v <= BROADCAST_DERIVED_MAX_ROWS
+    small = n_v <= batch_mod.BATCH_BROADCAST_MAX_ROWS
     vb = F.broadcast(v) if small else v
     # only asserted victims can be re-derived members
     present = track(
@@ -998,9 +947,11 @@ def derive_rdfs_delete(
     rem_graph = type(graph)(spark, remainder, graph.dictionary)
 
     # the affected remainder slice: rows carrying a victim's SUBJECT on
-    # either side. Subjects suffice (round 10, probe_r10 finding —
-    # victim OBJECTS are hub classes for type victims, and keying on
-    # them pulled the whole (… type C) slice = corpus-sized shuffle):
+    # either side. Subjects suffice (round 10 — victim OBJECTS are hub
+    # classes for type victims, and keying on them pulled the whole
+    # (… type C) slice: 225.4 MB shuffled for a 1000-victim delete at
+    # 20M triples, 0.1 MB keyed on subjects,
+    # `git show efe3c4f:tools/probe_r10.py`):
     # every rule atom that can ground a victim conclusion (vs, vp, vo)
     # contains vs — rdfs2/7/9 and symmetric/inverse atoms as subject
     # or object ((vo, p', vs) rows are caught by the o-side semi),
@@ -1014,7 +965,11 @@ def derive_rdfs_delete(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     n_k = keys.count()
-    kb = F.broadcast(keys) if n_k <= BROADCAST_DERIVED_MAX_ROWS else keys
+    kb = (
+        F.broadcast(keys)
+        if n_k <= batch_mod.BATCH_BROADCAST_MAX_ROWS
+        else keys
+    )
     slice0 = (
         remainder.join(kb, remainder["s"] == kb["k"], "left_semi")
         .unionByName(
@@ -1091,7 +1046,7 @@ def derive_rdfs_delete(
                 )
                 s1b = (
                     F.broadcast(step1)
-                    if step1.count() <= BROADCAST_DERIVED_MAX_ROWS
+                    if step1.count() <= batch_mod.BATCH_BROADCAST_MAX_ROWS
                     else step1
                 )
                 hit_pairs = (
@@ -1184,7 +1139,7 @@ def overdelete_rdfs(
         # frontier/over/cons are caller- and corpus-scale-controlled
         # (bulk deletes, hub fan-out) — every broadcast below is
         # count-gated like the insert paths' (_derive_only)
-        f_small = n_frontier <= BROADCAST_DERIVED_MAX_ROWS
+        f_small = n_frontier <= batch_mod.BATCH_BROADCAST_MAX_ROWS
         with scratch_scope():
             frames, _d = _derived_frames(schema_graph, data=frontier)
             if inv_pairs:
@@ -1244,12 +1199,12 @@ def overdelete_rdfs(
             )
             cb = (
                 F.broadcast(cons)
-                if cons.count() <= BROADCAST_DERIVED_MAX_ROWS
+                if cons.count() <= batch_mod.BATCH_BROADCAST_MAX_ROWS
                 else cons
             )
             ob = (
                 F.broadcast(over)
-                if n_over <= BROADCAST_DERIVED_MAX_ROWS
+                if n_over <= batch_mod.BATCH_BROADCAST_MAX_ROWS
                 else over
             )
             new_over = (

@@ -28,6 +28,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphula_spark import batch as batch_mod
 from graphula_spark.dictionary import Dictionary
 from graphula_spark.graph import Graph
 from graphula_spark.sources.ntriples import _LINE
@@ -103,20 +104,13 @@ def load_versioned_graph(spark: SparkSession, store_dir: str) -> Graph:
     for entry in m["log"]:
         name = entry["dir"]
         if entry["op"] == "del":
-            # del-deltas are batch-sized (s, p, o) id frames; subtract
-            # with the removal set on the broadcastable RIGHT side of
-            # the anti (the accumulating view only streams). The writer
-            # records the row count in the manifest, so the broadcast
-            # is count-gated without a read-time count job. Dictionary
-            # entries are retained — ids are content hashes, orphans
-            # are harmless (same contract as delete_string_triples).
+            # del-deltas are batch-sized (s, p, o) id frames on the
+            # RIGHT side of the anti, which the planner sizes from their
+            # parquet files (the accumulating view only streams).
+            # Dictionary entries are retained — ids are content hashes,
+            # orphans are harmless (same contract as
+            # delete_string_triples).
             rem = spark.read.parquet(f"{store_dir}/{name}/removals")
-            n_rem = entry.get("rows")
-            if (
-                n_rem is not None
-                and n_rem <= Dictionary.BROADCAST_NEW_TERMS_MAX_ROWS
-            ):
-                rem = F.broadcast(rem)
             triples = triples.join(rem, ["s", "p", "o"], "left_anti")
             continue
         dg = Graph.load(spark, f"{store_dir}/{name}")
@@ -265,28 +259,8 @@ def stream_ntriples_ingest(
                     F.lit(RDF_TYPE).alias("value")
                 )
             )
-        terms = (
-            term_src
-            .where(F.col("value").isNotNull())
-            .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # micro-batches are store-small: broadcast the batch against
-        # the STREAMING dictionary/corpus instead of anti-joining with
-        # the store on the right (LEFT ANTI can only broadcast its
-        # right side, so the old shape reshuffled the whole store's
-        # dictionary every batch — tools/probe_r8.py)
-        n_terms = terms.count()
-        if n_terms <= Dictionary.BROADCAST_NEW_TERMS_MAX_ROWS:
-            present = old.dictionary.df.join(
-                F.broadcast(terms), "value", "left_semi"
-            )
-            new_terms = terms.join(F.broadcast(present), "value", "left_anti")
-        else:
-            new_terms = terms.join(old.dictionary.df, "value", "left_anti")
-        fresh, fresh_clean = Dictionary._assign_ids(
-            new_terms, old.dictionary.df, n_terms=n_terms
-        )
+        # the delta dictionary carries only the batch's unseen terms
+        fresh, fresh_clean = old.dictionary.new_terms(term_src)
         old_exc = old.dictionary._get_exceptions()
         full_dict = Dictionary(
             spark,
@@ -307,23 +281,12 @@ def stream_ntriples_ingest(
             .dropDuplicates(["s", "p", "o"])
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        # dedup against the accumulated store with the batch broadcast
-        # (semi the overlap out of the store, anti the batch against
-        # the batch-bounded overlap) — a direct `batch ANTI store`
-        # shuffles the whole corpus every micro-batch
-        n_batch = batch_triples.count()
-        store_spo = old.triples.select("s", "p", "o")
-        if n_batch <= Dictionary.BROADCAST_NEW_TERMS_MAX_ROWS:
-            seen = store_spo.join(
-                F.broadcast(batch_triples), ["s", "p", "o"], "left_semi"
-            )
-            new_triples = batch_triples.join(
-                F.broadcast(seen), ["s", "p", "o"], "left_anti"
-            )
-        else:
-            new_triples = batch_triples.join(
-                store_spo, ["s", "p", "o"], "left_anti"
-            )
+        new_triples = batch_mod.minus_stored(
+            batch_triples,
+            batch_triples.count(),
+            old.triples.select("s", "p", "o"),
+            ["s", "p", "o"],
+        )
         if entailment is not None:
             from graphula_spark.operators import rdfs as R
 
@@ -411,7 +374,6 @@ def stream_ntriples_ingest(
             # the CacheManager never auto-evicts these per-batch persists;
             # a long-running stream would accumulate cached blocks without
             # bound (spilling to executor disk) if they outlived the batch
-            terms.unpersist()
             batch_triples.unpersist()
 
     return (
@@ -495,15 +457,10 @@ def stream_ntriples_delete(
         if n_v == 0:
             victims.unpersist()
             return
-        # only asserted rows can be removed; batch is the broadcastable
-        # right side of the semi when small
+        # only asserted rows can be removed; the counted victims are
+        # the right side of the semi, sized by the planner
         store_spo = old.triples.select("s", "p", "o")
-        vb = (
-            F.broadcast(victims)
-            if n_v <= Dictionary.BROADCAST_NEW_TERMS_MAX_ROWS
-            else victims
-        )
-        present = store_spo.join(vb, ["s", "p", "o"], "left_semi")
+        present = store_spo.join(victims, ["s", "p", "o"], "left_semi")
         removals = present
         if entailment is not None:
             from graphula_spark.operators import rdfs as R
@@ -517,7 +474,7 @@ def stream_ntriples_delete(
             # rest; kept ⊆ victims, so the n_v gate covers it
             kb = (
                 F.broadcast(kept)
-                if n_v <= Dictionary.BROADCAST_NEW_TERMS_MAX_ROWS
+                if n_v <= batch_mod.BATCH_BROADCAST_MAX_ROWS
                 else kept
             )
             removals = present.join(kb, ["s", "p", "o"], "left_anti")
@@ -531,7 +488,7 @@ def stream_ntriples_delete(
         if n_rem == 0:
             shutil.rmtree(f"{store_dir}/{name}", ignore_errors=True)
             return
-        log = [*cur["log"], {"dir": name, "op": "del", "rows": n_rem}]
+        log = [*cur["log"], {"dir": name, "op": "del"}]
         mid = {"base": cur["base"], "deltas": cur["deltas"], "log": log}
         _publish(store_dir, mid, cur)
         if len(log) >= compact_every:

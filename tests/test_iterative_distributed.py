@@ -5,7 +5,7 @@ the collect+union-find/BFS path — the distributed label-propagation CC
 and semi-naive closure loops (the actual 100 TB code path) had no
 forced CI coverage. These tests assert BOTH paths label-identical on
 the same random graphs (gate monkeypatched to 0 for the distributed
-leg, the suite's established pattern — see INSERT_BROADCAST_MAX_ROWS
+leg, the suite's established pattern — see BATCH_BROADCAST_MAX_ROWS
 in test_rdfs.py), plus one input that PROVABLY crosses the paths gate
 without any monkeypatch."""
 

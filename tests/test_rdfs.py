@@ -274,26 +274,29 @@ def test_derive_rdfs_dedups_overlapping_rules_and_excludes_asserted(spark):
     assert g2.materialize_rdfs().triples.count() == g2.triples.count()
 
 
+def _semi_anti_joins(df) -> list[str]:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [
+        ln
+        for ln in plan.splitlines()
+        if ("LeftSemi" in ln or "LeftAnti" in ln) and "Join" in ln
+    ]
+
+
 def test_small_derivation_plan_broadcasts_never_shuffles_corpus(spark):
-    """The round-8 gate, plan-asserted: below BROADCAST_DERIVED_MAX_ROWS
-    the corpus-overlap semi/anti pair must plan as BroadcastHashJoin
-    (probed at 20M triples: 10 MB vs 359 MB shuffled, tools/probe_r8.py)
-    — a SortMergeJoin here means the corpus map side shuffle-writes
-    before AQE can convert anything."""
+    """The round-8 rule, plan-asserted: a small derived set's
+    corpus-overlap semi/anti pair must plan as BroadcastHashJoin
+    (measured at 20M triples: 10 MB vs 359 MB shuffled,
+    `git show efe3c4f:tools/probe_r8.py`) — a SortMergeJoin here means
+    the corpus map side shuffle-writes before AQE can convert
+    anything."""
     from graphula_spark.operators.rdfs import derive_rdfs
 
     g = Graph.from_string_triples(
         spark, spark.createDataFrame(ONTOLOGY + DATA, ["s", "p", "o"])
     )
-    plan = (
-        derive_rdfs(g)._jdf.queryExecution().executedPlan().toString()
-    )
-    semi_anti = [
-        ln
-        for ln in plan.splitlines()
-        if ("LeftSemi" in ln or "LeftAnti" in ln) and "Join" in ln
-    ]
-    assert semi_anti, plan
+    semi_anti = _semi_anti_joins(derive_rdfs(g))
+    assert semi_anti
     for ln in semi_anti:
         assert "BroadcastHashJoin" in ln, ln
 
@@ -310,21 +313,19 @@ def test_insert_batch_plan_broadcasts_never_shuffles_corpus(spark):
             [("ex:new", "ex:likes", "ex:alice")], ["s", "p", "o"]
         )
     )
-    plan = g2.triples._jdf.queryExecution().executedPlan().toString()
-    semi_anti = [
-        ln
-        for ln in plan.splitlines()
-        if ("LeftSemi" in ln or "LeftAnti" in ln) and "Join" in ln
-    ]
-    assert semi_anti, plan
+    semi_anti = _semi_anti_joins(g2.triples)
+    assert semi_anti
     for ln in semi_anti:
         assert "BroadcastHashJoin" in ln, ln
 
 
 def test_insert_large_batch_fallback_same_result(spark, monkeypatch):
-    """Above INSERT_BROADCAST_MAX_ROWS the insert takes the shuffle
-    anti-join branch; both branches must produce the identical
-    set-semantics snapshot (dedup within batch + against corpus)."""
+    """Above BATCH_BROADCAST_MAX_ROWS, and with the planner's own
+    broadcasts off, the insert takes shuffle joins; both legs must
+    produce the identical set-semantics snapshot (dedup within batch +
+    against corpus)."""
+    from graphula_spark import batch as batch_mod
+
     g = Graph.from_string_triples(
         spark, spark.createDataFrame(DATA, ["s", "p", "o"])
     )
@@ -346,8 +347,18 @@ def test_insert_large_batch_fallback_same_result(spark, monkeypatch):
         }
 
     broadcast_path = snapshot(g.add_string_triples(batch))
-    monkeypatch.setattr(Graph, "INSERT_BROADCAST_MAX_ROWS", 0)
-    shuffle_path = snapshot(g.add_string_triples(batch))
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(threshold)
+    monkeypatch.setattr(batch_mod, "BATCH_BROADCAST_MAX_ROWS", 0)
+    spark.conf.set(threshold, "-1")
+    try:
+        g2 = g.add_string_triples(batch)
+        shuffle_path = snapshot(g2)
+        joins = _semi_anti_joins(g2.triples)
+    finally:
+        spark.conf.set(threshold, prev)
+    assert joins
+    assert not [ln for ln in joins if "BroadcastHashJoin" in ln], joins
     want = set(DATA) | {("ex:new", "ex:likes", "ex:alice")}
     assert broadcast_path == shuffle_path == want
 

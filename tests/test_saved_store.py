@@ -2,7 +2,8 @@
 partition pruning of o-bound scans, the planner stats and the
 partition pruning that INSERT DATA / DELETE DATA snapshots of it carry
 (`BgpStats.with_delta`) instead of recomputing over the whole store,
-the shape of the result decode, and the empty store."""
+the shape of the result decode, small batches applied with the store
+streaming, and the empty store."""
 
 import glob
 import os
@@ -304,6 +305,128 @@ def test_update_snapshots_keep_partition_pruning(spark, tmp_path):
     q = g.sparql(f"SELECT ?s ?o WHERE {{ ?s <{EX}name> ?o }}")
     assert sorted(map(tuple, q.collect())) == want
     _assert_prunes(q, path)
+
+
+@pytest.mark.parametrize("verb", ["add", "delete"])
+def test_materialized_updates_keep_partition_pruning(spark, tmp_path, verb):
+    """add/delete_materialized_rdfs on a closed store saved with 7
+    buckets: the snapshot keeps the store layout, so a bound-predicate
+    scan still reads only its predicate's partition."""
+    from graphula_spark.operators.rdfs import RDF_TYPE, RDFS_SUBCLASS
+
+    base = _base_triples() | {
+        (f"{EX}C1", RDFS_SUBCLASS, f"{EX}Top"),
+        (f"{EX}s90", RDF_TYPE, f"{EX}C1"),
+    }
+    path = str(tmp_path / "closed7")
+    df = spark.createDataFrame(sorted(base), "s string, p string, o string")
+    Graph.from_string_triples(spark, df).materialize_rdfs().save(path, p_buckets=7)
+    g = Graph.load(spark, path)
+    tops = {f"{EX}s90"}
+    if verb == "add":
+        # the new C1 member derives its Top membership
+        batch = [(f"{EX}s91", RDF_TYPE, f"{EX}C1")]
+        g = g.add_materialized_rdfs(spark.createDataFrame(batch, "s string, p string, o string"))
+        tops.add(f"{EX}s91")
+    else:
+        # the victim stays: s90 still derives it from its C1 membership
+        batch = [(f"{EX}s90", RDF_TYPE, f"{EX}Top")]
+        g = g.delete_materialized_rdfs(spark.createDataFrame(batch, "s string, p string, o string"))
+    q = g.sparql(f"SELECT ?s WHERE {{ ?s <{RDF_TYPE}> <{EX}Top> }}")
+    assert sorted(r.s for r in q.collect()) == sorted(tops)
+    _assert_prunes(q, path)
+
+
+# -- small batches against a store above the broadcast threshold -------
+
+#: nodes that pass a scan's rows on one for one: an Exchange reached
+#: from a scan through these alone shuffles or broadcasts the scan
+_ROW_PASSING = (
+    "ProjectExec",
+    "FilterExec",
+    "ColumnarToRowExec",
+    "InputAdapter",
+    "WholeStageCodegenExec",
+)
+
+
+def _exchanges_over_scan(df, directories: list[str]) -> list[str]:
+    """The Exchange nodes in the executed plan of `df` that move the
+    rows of a scan of one of `directories`."""
+    df.collect()
+    out = []
+    for n in _nodes(df._jdf.queryExecution().executedPlan()):
+        if not n.getClass().getSimpleName().endswith("ExchangeExec"):
+            continue
+        stack = _children(n)
+        while stack:
+            c = stack.pop()
+            name = c.getClass().getSimpleName()
+            if name == "FileSourceScanExec" and any(
+                _scans_dir(c, d) for d in directories
+            ):
+                out.append(n.toString())
+            elif name in _ROW_PASSING:
+                stack.extend(_children(c))
+    return out
+
+
+def test_small_batches_stream_a_store_above_the_broadcast_threshold(
+    spark, small_store, monkeypatch
+):
+    """With the broadcast threshold below the store's triples and
+    dictionary but above a few-row batch, INSERT DATA, DELETE DATA and
+    a dictionary union give the right rows, and none of their
+    batch-against-store joins moves the store: each counted batch is
+    sized by the planner and broadcast, the store streams."""
+    from graphula_spark import batch as batch_mod
+
+    path, base = small_store
+    g = Graph.load(spark, path)
+    added = [(f"{EX}s{i}", f"{EX}name", f'"m{i}"') for i in (1, 70)]
+    removed = [(f"{EX}s{i}", f"{EX}name", f'"n{i}"') for i in (2, 3)]
+    terms = [f"{EX}s1", f"{EX}brand-new"]
+    # every frame a batch-against-store join ran in: the two-step's
+    # results, and the probes (the dictionary's id-clash check) that
+    # run inside an isEmpty
+    frames = []
+    minus_stored = batch_mod.minus_stored
+    is_empty = type(g.triples).isEmpty
+
+    def spy_minus_stored(*args, **kwargs):
+        frames.append(minus_stored(*args, **kwargs))
+        return frames[-1]
+
+    def spy_is_empty(df):
+        frames.append(df)
+        return is_empty(df)
+
+    low = 2048
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(threshold)
+    spark.conf.set(threshold, str(low))
+    try:
+        for part in (g.triples, g.dictionary.df):
+            est = part._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+            assert est > low
+        with monkeypatch.context() as m:
+            m.setattr(batch_mod, "minus_stored", spy_minus_stored)
+            m.setattr(type(g.triples), "isEmpty", spy_is_empty)
+            g_ins = g.sparql_update(f"INSERT DATA {{ {' . '.join(map(_nt, added))} }}")
+            g_del = g.sparql_update(f"DELETE DATA {{ {' . '.join(map(_nt, removed))} }}")
+            d2 = g.dictionary.union(spark.createDataFrame([(t,) for t in terms], "value string"))
+        frames += [g_del.triples, d2.df]
+        store = [f"{path}/triples", f"{path}/dict"]
+        for df in frames:
+            assert not _exchanges_over_scan(df, store)
+    finally:
+        spark.conf.set(threshold, prev)
+    assert len(frames) > 4
+    query = "SELECT ?s ?p ?o WHERE { ?s ?p ?o }"
+    assert set(map(tuple, g_ins.sparql(query).collect())) == base | set(added)
+    assert set(map(tuple, g_del.sparql(query).collect())) == base - set(removed)
+    assert d2.df.count() == g.dictionary.df.count() + 1
+    assert set(d2.lookup_terms(terms)) == set(terms)
 
 
 # -- empty store --------------------------------------------------------

@@ -1961,14 +1961,15 @@ def test_service_queries_bypass_plan_cache(spark):
 
 
 class TestDatasetQuadInsert:
-    """add_string_quads set semantics via the round-8 counted two-step:
-    the overlap joins must be NULL-SAFE on g (default-graph rows carry
-    null), intra-batch duplicates collapse, and the above-gate shuffle
-    branch produces the identical snapshot."""
+    """add_string_quads set semantics via `batch.minus_stored`: the
+    overlap joins must be NULL-SAFE on g (default-graph rows carry
+    null), intra-batch duplicates collapse, and the shuffle branch
+    (above the row gate, planner broadcasts off) produces the
+    identical snapshot."""
 
     def test_set_semantics_null_safe_both_branches(self, spark, monkeypatch):
+        from graphula_spark import batch as batch_mod
         from graphula_spark.dataset import Dataset
-        from graphula_spark.graph import Graph
 
         asserted = [
             ("ex:a", "ex:p", "ex:b", None),  # default graph
@@ -1985,14 +1986,30 @@ class TestDatasetQuadInsert:
             ],
             ["s", "p", "o", "g"],
         )
-        for gate in (Graph.INSERT_BROADCAST_MAX_ROWS, 0):
-            monkeypatch.setattr(Graph, "INSERT_BROADCAST_MAX_ROWS", gate)
-            out = ds.add_string_quads(batch)
-            # 2 asserted + exactly 1 new quad: a plain (non-null-safe)
-            # equi-join would re-add BOTH null-g rows here
-            assert out.quads.count() == 3, f"gate={gate}"
-            # idempotent: re-adding the same batch adds nothing
-            assert out.add_string_quads(batch).quads.count() == 3
+        threshold = "spark.sql.autoBroadcastJoinThreshold"
+        prev = spark.conf.get(threshold)
+        for gate in (batch_mod.BATCH_BROADCAST_MAX_ROWS, 0):
+            monkeypatch.setattr(batch_mod, "BATCH_BROADCAST_MAX_ROWS", gate)
+            if gate == 0:
+                spark.conf.set(threshold, "-1")
+            try:
+                out = ds.add_string_quads(batch)
+                # 2 asserted + exactly 1 new quad: a plain (non-null-safe)
+                # equi-join would re-add BOTH null-g rows here
+                assert out.quads.count() == 3, f"gate={gate}"
+                # idempotent: re-adding the same batch adds nothing
+                assert out.add_string_quads(batch).quads.count() == 3
+                plan = out.quads._jdf.queryExecution().executedPlan()
+                joins = [
+                    ln
+                    for ln in plan.toString().splitlines()
+                    if ("LeftSemi" in ln or "LeftAnti" in ln) and "Join" in ln
+                ]
+            finally:
+                spark.conf.set(threshold, prev)
+            assert joins, f"gate={gate}"
+            if gate == 0:
+                assert not [ln for ln in joins if "BroadcastHashJoin" in ln]
 
 
 class TestDatasetMaterialization:

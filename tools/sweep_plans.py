@@ -35,11 +35,60 @@ import json
 import os
 import sys
 import time
+import urllib.request
+
+from pyspark.sql import SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.probe_r8 import _stages, get_probe_spark  # noqa: E402
-from tools.probe_r12 import _task_summary  # noqa: E402
+
+def get_probe_spark():
+    """The engine session's settings (graphula_spark.session.get_spark)
+    with the UI enabled: the REST status API is the only place per-stage
+    task summaries are exposed."""
+    return (
+        SparkSession.builder.appName("sweep-plans")
+        .master("local[32]")
+        .config("spark.sql.shuffle.partitions", "32")
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+            "true",
+        )
+        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.driver.memory", "16g")
+        .config("spark.ui.enabled", "true")
+        .config("spark.sql.session.timeZone", "UTC")
+        .getOrCreate()
+    )
+
+
+def _rest(spark, route: str):
+    ui = spark.sparkContext.uiWebUrl
+    app = spark.sparkContext.applicationId
+    with urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/{route}") as r:
+        return json.load(r)
+
+
+def _stages(spark) -> dict[tuple[int, int], dict]:
+    """Every completed stage, keyed by (stage id, attempt)."""
+    return {
+        (s["stageId"], s["attemptId"]): s
+        for s in _rest(spark, "stages?status=complete")
+    }
+
+
+def _task_summary(spark, stage_id: int, attempt: int) -> dict | None:
+    try:
+        return _rest(
+            spark,
+            f"stages/{stage_id}/{attempt}/taskSummary?quantiles=0.5,1.0",
+        )
+    except Exception:
+        return None
 
 #: one-task stages slower than this are a serialization point worth a
 #: look even on local[32]; at sf0.1 every healthy stage is far below it
